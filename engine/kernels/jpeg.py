@@ -182,6 +182,19 @@ def _extend(v: int, size: int) -> int:
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
+# T.81 F.1.2.1: a DC difference category is at most 11 for 8-bit
+# samples. A corrupt DHT can carry any byte as a DC symbol; reading that
+# many magnitude bits would build a value no int32 coefficient holds.
+_MAX_DC_SIZE = 11
+
+
+def _read_dc_diff(reader: _BitReader, dc_tab: _HuffTable) -> int:
+    size = reader.read_symbol(dc_tab)
+    if size > _MAX_DC_SIZE:
+        raise ValueError("jpeg_bad_dc_size")
+    return _extend(reader.read_bits(size), size)
+
+
 class _Frame:
     __slots__ = (
         "w", "h", "components", "qtabs", "dc_tabs", "ac_tabs",
@@ -367,9 +380,7 @@ def decode_jpeg_luma(raw: bytes) -> tuple[int, int, bytes]:
                 for by in range(cv):
                     for bx in range(ch):
                         coeffs = np.zeros(64)
-                        size = reader.read_symbol(dc_tab)
-                        diff = _extend(reader.read_bits(size), size)
-                        preds[cid] += diff
+                        preds[cid] += _read_dc_diff(reader, dc_tab)
                         coeffs[0] = preds[cid]
                         k = 1
                         while k < 64:
@@ -447,8 +458,7 @@ def _find_scan_end(raw: bytes, pos: int) -> int:
 
 
 def _dc_first_block(reader, dc_tab, preds, cid, al):
-    size = reader.read_symbol(dc_tab)
-    preds[cid] += _extend(reader.read_bits(size), size)
+    preds[cid] += _read_dc_diff(reader, dc_tab)
     return preds[cid] << al
 
 

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import re
 
-LANGS = ("en", "fr", "es", "de", "zh")
-
 _PROFILES = {
     "en": frozenset(
         "the of and to in is that it was for on are as with his they at be this"

@@ -1,12 +1,12 @@
 """BM25 keyword search over the documents table.
 
-The lexical complement to the engine's embedding ANN surface
-(engine/ops/kmeans, engine/ops/pq, jobs/ann.py): corpus curation and
-inspection constantly need "find the docs about X" (probe-set
-construction for decontamination, boilerplate hunting, quality
-spot-checks), and at 10^12 docs that must be a pruned scan, not a
-grep. Scoring is Robertson/Spärck Jones BM25 with the Lucene idf
-variant: ln(1 + (N - df + 0.5)/(df + 0.5)) — non-negative for any df.
+The lexical complement to the engine's embedding vectors
+(engine/io/vector_sink.py): corpus curation and inspection constantly
+need "find the docs about X" (probe-set construction for
+decontamination, boilerplate hunting, quality spot-checks), and at
+10^12 docs that must be a pruned scan, not a grep. Scoring is
+Robertson/Spärck Jones BM25 with the Lucene idf variant:
+ln(1 + (N - df + 0.5)/(df + 0.5)) — non-negative for any df.
 
 Two shapes, same scoring spec:
 
@@ -18,9 +18,8 @@ Two shapes, same scoring spec:
   build/search     the persistent path: postings written ONCE,
                    PARTITIONED BY a term-hash bucket, so each query
                    reads ~|terms|/n_buckets of the index via partition
-                   pruning (the jobs/ann.py discipline: the physical
-                   layout IS the index). Queries then cost hit-sized
-                   joins only.
+                   pruning (the physical layout IS the index).
+                   Queries then cost hit-sized joins only.
 
 Tokenization is pinned to the engine's LM tokenizer
 (engine/ops/lm.lm_tokens: lowercase, \\p{L}\\p{N} runs) so LM, token
@@ -213,9 +212,8 @@ def update_bm25_index(
     the exact running mean, an index built as build(A) + update(B)
     scores IDENTICALLY to build(A ∪ B). The caller owns novelty
     ACROSS batches — re-adding a doc id in a LATER batch would double
-    its postings (screen re-crawls through
-    engine/ops/bloom.screen_new_keys or pipeline.changed_docs first,
-    the same contract the vector-index delta path states).
+    its postings (screen re-crawls through pipeline.changed_docs
+    first, the same contract the vector-index delta path states).
 
     Crash safety (ADVICE r3): the batch writes to its OWN
     batch=<n_batches> subdir in overwrite mode, and only the final

@@ -4,7 +4,7 @@ corpus replaces hand-tuned thresholds) — logistic regression on the
 engine's own quality_metrics features, trained with nothing but Spark
 passes (SURVEY §2 training-data extensions).
 
-Spark-first shape (the same discipline as engine/ops/kmeans.py):
+Spark-first shape:
 
   * features are the JVM-side quality_metrics columns (or any numeric
     columns the caller names) — no tokenizer state, no vocabulary to

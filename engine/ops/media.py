@@ -26,8 +26,6 @@ MEDIA_FEATURES_DDL = (
 
 FRAMES_DDL = "media_id long, frame_ix int, frame_energy long"
 
-THUMBS_DDL = "media_id long, thumb_w int, thumb_h int, thumb binary"
-
 
 def _features_batches(
     batches: Iterator[pd.DataFrame],
@@ -123,39 +121,6 @@ def build_media_frames(media: DataFrame, hop: int = 256) -> DataFrame:
     )
 
 
-def _thumbs_batches(tw: int, th: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from engine.kernels.multimodal import (
-            decode_png_gray8,
-            resize_nearest,
-            sniff_media,
-        )
-
-        for pdf in batches:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(raw) if raw is not None else b""
-                if sniff_media(raw) != "png":
-                    continue
-                try:
-                    w, h, px = decode_png_gray8(raw)
-                except Exception:
-                    continue
-                out.append((int(mid), tw, th, resize_nearest(px, w, h, tw, th)))
-            yield pd.DataFrame(
-                out, columns=["media_id", "thumb_w", "thumb_h", "thumb"]
-            )
-
-    return fn
-
-
-def build_media_thumbnails(media: DataFrame, tw: int = 8, th: int = 8) -> DataFrame:
-    """Decode + resize path for images (thumbnails as binary)."""
-    return media.select("media_id", "payload").mapInPandas(
-        _thumbs_batches(tw, th), THUMBS_DDL
-    )
-
-
 def image_neardup_pairs(
     features: DataFrame,
     max_hamming: int = 6,
@@ -223,76 +188,3 @@ def media_hash_bands(
         F.col("media_id").alias("doc_id"), F.col("ahash").alias("sim")
     )
     return hash64_bands(hashed, n_bands=n_bands, bits_per_band=bits_per_band)
-
-
-AUDIO_FP_DDL = "media_id long, sim long"
-
-
-def build_audio_fingerprints(
-    media: DataFrame, hop: int = 256, num_partitions: int | None = None
-) -> DataFrame:
-    """(media_id, sim): 64-bit perceptual audio fingerprint per
-    decodable WAV payload (engine/kernels/multimodal.
-    audio_fingerprint64 — amplitude-scale-invariant energy-delta
-    signs). Non-audio / undecodable rows are dropped here, so the
-    whole media table can be passed. One map-only Arrow pass; sim is
-    MSB-folded signed (the ahash convention — XOR hamming is mask-
-    invariant, so banding needs no undo)."""
-    from engine.kernels.multimodal import audio_fingerprint64, decode_wav_samples
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["payload"]):
-                if raw is None:
-                    continue
-                try:
-                    samples = decode_wav_samples(bytes(raw))
-                except Exception:
-                    continue
-                fp = audio_fingerprint64(samples, hop=hop)
-                out.append((int(mid), fp - (1 << 63)))
-            yield pd.DataFrame(out, columns=["media_id", "sim"])
-
-    src = media.select("media_id", "payload")
-    if num_partitions:
-        src = src.repartition(num_partitions)
-    return src.mapInPandas(fn, AUDIO_FP_DDL)
-
-
-def audio_neardup_pairs(
-    media: DataFrame,
-    max_hamming: int = 6,
-    n_bands: int = 8,
-    bits_per_band: int = 8,
-    hop: int = 256,
-    hot_bucket_cap: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Perceptual near-dup AUDIO pairs (r4): (media_a < media_b,
-    hamming) over the 64-bit energy-delta fingerprint — the audio
-    twin of image_neardup_pairs, riding the SAME hamming-banding core
-    (engine/ops/dedup.hash64_candidate_pairs), so the recall
-    guarantee (max_hamming < n_bands -> at least one exact band
-    match) and hot-bucket semantics are identical. A re-encoded or
-    volume-normalized copy of a clip fingerprints identically
-    (scale-invariant energies), which is precisely the crawl-dedup
-    case for audio assets."""
-    from engine.ops.dedup import hash64_candidate_pairs
-
-    hashed = build_audio_fingerprints(media, hop=hop).withColumnRenamed(
-        "media_id", "doc_id"
-    )
-    pairs = hash64_candidate_pairs(
-        hashed,
-        max_hamming=max_hamming,
-        n_bands=n_bands,
-        bits_per_band=bits_per_band,
-        hot_bucket_cap=hot_bucket_cap,
-        stats=stats,
-    )
-    return pairs.select(
-        F.col("doc_a").alias("media_a"),
-        F.col("doc_b").alias("media_b"),
-        "hamming",
-    )

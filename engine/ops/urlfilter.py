@@ -147,8 +147,7 @@ def filter_urls(
         # corpus, but its size is input-dependent, so no forced
         # broadcast on the verdict join-back: AQE picks broadcast when
         # blocked is actually small and falls back to a shuffle join
-        # otherwise (the engine/ops/decontaminate.py discipline,
-        # ADVICE r2).
+        # otherwise (ADVICE r2).
         out = out.join(
             blocked.withColumn("blocked_domain", F.lit(True)),
             out[url_col] == blocked["_u"],

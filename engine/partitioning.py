@@ -62,8 +62,8 @@ def fits_broadcast_budget(
     bytes_expr: F.Column,
     budget_bytes: int | None,
 ) -> bool:
-    """Size-budgeted broadcast gate (the engine/ops/bloom.bloom_probe
-    discipline, factored out for every |hosts|-sized dim table):
+    """Size-budgeted broadcast gate, factored out for every
+    |hosts|-sized dim table:
     returns True iff sum(bytes_expr) over est_df fits budget_bytes, so
     the caller may `F.broadcast` the dim side; otherwise the caller
     must leave the join unhinted and let AQE pick the strategy from

@@ -18,7 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from engine.partitioning import partition_key_col
 from engine.udfs import (
@@ -43,19 +43,6 @@ EXTRACTED_COLS = [
 ]
 
 
-def dedup_latest_per_url(pages: DataFrame) -> DataFrame:
-    """A10: one row per url — the latest capture wins (ties broken by
-    payload hash so the winner is deterministic even at equal ts)."""
-    w = Window.partitionBy("url").orderBy(
-        F.desc("warc_ts"), F.desc(F.xxhash64(F.col("html")))
-    )
-    return (
-        pages.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def build_extracted(
     pages: DataFrame,
     num_partitions: int | None = None,
@@ -74,8 +61,8 @@ def build_extracted(
          AFTER extraction: partial (map-side) + final agg, ONE
          exchange carrying extracted text columns only (~half the
          html bytes, no window sort pass). The winner is the max of
-         struct(warc_ts, xxhash64(html)) — identical semantics to the
-         dedup_latest_per_url window incl. the equal-ts tiebreak.
+         struct(warc_ts, xxhash64(html)) — identical semantics to a
+         latest-per-url window incl. the equal-ts tiebreak.
     Re-crawls cost one wasted extraction per duplicate (~2% in CC),
     which is far cheaper than shuffling every payload byte to
     co-locate urls before extracting.
@@ -338,13 +325,6 @@ def upsert_latest(spark, table_path: str, incoming: DataFrame) -> dict:
 def with_partition_key(pages: DataFrame, host_buckets: int = 64) -> DataFrame:
     """Attach the checkpoint work-unit key (A12)."""
     return pages.withColumn("part_key", partition_key_col(host_buckets=host_buckets))
-
-
-def build_pipeline(pages: DataFrame, num_partitions: int | None = None) -> dict:
-    extracted = build_extracted(pages, num_partitions)
-    chunks = build_chunks(extracted)
-    vectors = build_vectors(chunks)
-    return {"extracted": extracted, "chunks": chunks, "vectors": vectors}
 
 
 def changed_docs(

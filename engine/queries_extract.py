@@ -113,7 +113,7 @@ def x02(spark, sf_dir):
     # localCheckpoint, not persist: both uses below read chunks once,
     # and checkpointed partitions are auto-released when this DF is
     # GC'd — persist() would accumulate cache entries across the
-    # repeated invocations bench.py/check_oracles make per session
+    # repeated invocations check_oracles makes per session
     ch = build_chunks(ex).localCheckpoint(eager=True)
     per_chunk = ch.groupBy("url").agg(
         F.count(F.lit(1)).alias("n_chunks"),

@@ -136,12 +136,18 @@ def media_neardup_stream(
     x corpus. Unlike the minhash twin, both sides carry the full
     64-bit hash, so the exact hamming distance is computed in the
     join and filtered to max_hamming — candidate recall keeps the
-    pigeonhole guarantee while the emitted pairs are exact, identical
-    to batch image_neardup_pairs on the same assets (pinned in
-    tests/test_streaming.py). Band-collision multiplicity is deduped
-    per micro-batch in the foreachBatch sink (the media schema has no
-    event time to watermark on; a file-sourced asset arrives exactly
-    once, so cross-batch duplicates cannot occur)."""
+    pigeonhole guarantee while the emitted pairs are exact.
+
+    Coverage: only (arriving, indexed) pairs are emitted. Two assets
+    that both arrive on the stream, neither in the static index, are
+    never compared, so intra-stream near-dups are missed. The output
+    equals batch image_neardup_pairs over all the assets restricted to
+    (arriving, indexed) pairs (pinned in tests/test_streaming.py).
+
+    Band-collision multiplicity is deduped per micro-batch in the
+    foreachBatch sink (the media schema has no event time to watermark
+    on; a file-sourced asset arrives exactly once, so cross-batch
+    duplicates cannot occur)."""
     from engine.ops.dedup import hash64_bands
 
     feats = media_features_stream(media)

@@ -79,13 +79,6 @@ def _route_and_extract_one(raw) -> tuple[str, str, str | None]:
         return ("error", "", f"{type(exc).__name__}")
 
 
-def _extract_with_sents(raw) -> tuple[str, str, str | None, int]:
-    from engine.kernels.sentences import sentence_spans
-
-    path, text, err = _route_and_extract_one(raw)
-    return (path, text, err, len(sentence_spans(text)) if text else 0)
-
-
 @pandas_udf(EXTRACT_STRUCT)
 def route_extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """Fused media-router + three-path extractor + sentence counter
@@ -196,15 +189,6 @@ def docmeta_udf(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(
         rows,
         columns=["title", "description", "canonical", "robots", "noindex"],
-    )
-
-
-@pandas_udf(IntegerType())
-def n_sentences_udf(text: pd.Series) -> pd.Series:
-    from engine.kernels.sentences import sentence_spans_batch
-
-    return pd.Series(
-        [len(s) for s in sentence_spans_batch(list(text))], dtype="int32"
     )
 
 

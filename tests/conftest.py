@@ -8,6 +8,12 @@ import pytest
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
+def pytest_configure(config):
+    # a DeprecationWarning raised from engine code (e.g. NumPy's
+    # out-of-bound int conversion) is a latent bug: fail the test
+    config.addinivalue_line("filterwarnings", "error::DeprecationWarning:engine")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from engine.session import get_spark

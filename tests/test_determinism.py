@@ -1,6 +1,5 @@
 """T2 (SURVEY.md §5): parallelism-invariance — identical output under
-different partition counts and shuffled input order. The cross-process
-local[8]-vs-local[32] check lives in bench.py / BENCH (§6)."""
+different partition counts and shuffled input order."""
 
 from __future__ import annotations
 

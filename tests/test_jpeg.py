@@ -136,6 +136,33 @@ def test_typed_rejections():
         decode_jpeg_luma(good[: len(good) // 2])
 
 
+def _with_dc_symbol(raw, sym):
+    """Rewrite every value of the fixture's DC Huffman table to `sym`."""
+    from engine.synth.jpeggen import _DC_BITS, _DC_VALUES
+
+    dc = bytes([0x00]) + bytes(_DC_BITS)
+    assert dc + _DC_VALUES in raw
+    return raw.replace(dc + _DC_VALUES, dc + bytes([sym]) * len(_DC_VALUES))
+
+
+@pytest.mark.parametrize("sym", [12, 15, 255])
+@pytest.mark.parametrize("progressive", [False, True])
+def test_corrupt_dc_size_is_typed_error(progressive, sym):
+    """A DHT DC symbol above T.81's category 11 is a typed decode
+    error before any magnitude bits are read — not a coefficient that
+    overflows the int32 block array (a NumPy warning or OverflowError)."""
+    import warnings
+
+    from engine.synth.jpeggen import make_jpeg_progressive_gray
+
+    make = make_jpeg_progressive_gray if progressive else make_jpeg_gray
+    raw = _with_dc_symbol(make(42, 1), sym)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        with pytest.raises(ValueError, match="jpeg_bad_dc_size"):
+            decode_jpeg_luma(raw)
+
+
 def test_media_features_jpeg_real_decode():
     from engine.kernels.multimodal import ahash64, media_features
 
