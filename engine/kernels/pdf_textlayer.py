@@ -33,6 +33,11 @@ from engine.kernels.normalize import canonicalize
 
 WORD_GAP_KERN = -180.0
 COLUMN_BAND_PX = 300
+# decoded-size cap per stream and filter: a Flate or LZW stream that
+# would decode past it is a bomb (kilobytes in, gigabytes out) and
+# decodes to b"" like any other malformed stream. The largest decoded
+# stream in the kernel fixtures is under 1 KiB.
+MAX_STREAM_BYTES = 16 << 20
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)endobj", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
@@ -69,12 +74,13 @@ def _ascii_hex_decode(data: bytes) -> bytes:
     return bytes.fromhex(hexdigits.decode("ascii"))
 
 
-def _lzw_decode(data: bytes) -> bytes:
+def _lzw_decode(data: bytes, cap: int = MAX_STREAM_BYTES) -> bytes:
     """PDF LZWDecode (PDF 32000 §7.4.4 = TIFF-style LZW): MSB-first
     variable-width codes 9->12 bits, clear table = 256, EOD = 257,
     EarlyChange=1 (the default: the width grows one code early, when
     entry 2^w - 1 is ADDED). DecodeParms predictors are out of the
-    honest subset (the generator never emits them)."""
+    honest subset (the generator never emits them). Output past `cap`
+    bytes raises ValueError."""
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     base_len = len(table)
     out = bytearray()
@@ -110,25 +116,32 @@ def _lzw_decode(data: bytes) -> bytes:
                 if len(table) >= (1 << width) - 1 and width < 12:
                     width += 1
             out += entry
+            if len(out) > cap:
+                raise ValueError("lzw_over_cap")
             prev = entry
     return bytes(out)
 
 
 def _decode_stream(dict_bytes: bytes, data: bytes) -> bytes:
     """Apply the /Filter chain in order (single name or array). Any
-    unknown filter or decode error yields b'' — total, the kernel's
-    malformed-input contract."""
+    unknown filter, decode error or output over MAX_STREAM_BYTES
+    yields b'' — total, the kernel's malformed-input contract."""
     fm = _FILTER_RE.search(dict_bytes)
     if not fm:
         return data
     try:
         for name in _FILTER_NAME_RE.findall(fm.group(1)):
             if name == b"FlateDecode" or name == b"Fl":
-                data = zlib.decompress(data)
+                d = zlib.decompressobj()
+                data = d.decompress(data, MAX_STREAM_BYTES + 1)
+                # not eof: the stream is truncated or was cut off at
+                # the cap
+                if not d.eof or len(data) > MAX_STREAM_BYTES:
+                    return b""
             elif name == b"ASCIIHexDecode" or name == b"AHx":
                 data = _ascii_hex_decode(data)
             elif name == b"LZWDecode" or name == b"LZW":
-                data = _lzw_decode(data)
+                data = _lzw_decode(data, MAX_STREAM_BYTES)
             else:  # DCTDecode etc.: outside the honest subset
                 return b""
     except Exception:

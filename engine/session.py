@@ -26,6 +26,30 @@ def sweep_dead_spill_dirs(base: str) -> list[str]:
     return swept
 
 
+def host_driver_memory(mem_total_kib: int | None) -> tuple[str, str]:
+    """(spark.driver.memory, spark.driver.maxResultSize) for a host
+    with mem_total_kib of RAM (/proc/meminfo MemTotal). In local mode
+    the driver JVM is the whole engine, so its heap is a quarter of
+    RAM, between 1g and 24g, leaving the rest to the Python workers
+    and the page cache; collected results get a quarter of the heap.
+    None (MemTotal unreadable) keeps the 24g/4g ceiling."""
+    if mem_total_kib is None:
+        return "24g", "4g"
+    heap_mib = min(24 << 10, max(1 << 10, (mem_total_kib >> 10) // 4))
+    return f"{heap_mib}m", f"{max(256, heap_mib // 4)}m"
+
+
+def _mem_total_kib() -> int | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
 def get_spark(
     master: str = "local[*]",
     app_name: str = "webtext-engine",
@@ -44,12 +68,17 @@ def get_spark(
     session build for the job entrypoints."""
     import os
 
+    # local-mode JVM heap: default 1g OOMs on blob-heavy shuffles, a
+    # fixed large one outgrows small hosts; SPARK_DRIVER_MEMORY wins
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        heap, max_result = os.environ["SPARK_DRIVER_MEMORY"], "4g"
+    else:
+        heap, max_result = host_driver_memory(_mem_total_kib())
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        # local-mode JVM heap: default 1g OOMs on blob-heavy shuffles
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.driver.maxResultSize", "4g")
+        .config("spark.driver.memory", heap)
+        .config("spark.driver.maxResultSize", max_result)
         # oracle comparison + determinism: duckdb timestamps are UTC-naive
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow at every Python boundary; blob-heavy rows need small batches
@@ -62,6 +91,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+        # let AQE coalesce a persisted plan's output too: without it a
+        # cached ingest batch keeps every dedup shuffle partition (200
+        # by default), and each becomes a Python task downstream
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # idempotent per-partition overwrite (checkpoint/resume A12)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # blob-heavy tables: 128MB default splits give too few map

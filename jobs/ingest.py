@@ -4,11 +4,20 @@
         --n-pages 50000 --output /data/out --run-id r1 [--resume]
 
 Stages per COMMIT BATCH (a group of host-bucket work units):
-corpus/table scan -> partition-key filter -> dedup -> fused
-route+extract (Arrow UDF) -> partitioned extracted write -> chunk
-(mapInPandas) -> embed -> partitioned chunk/vector writes -> lineage
--> manifest commit for the batch. Works identically from
+corpus/table scan -> partition-key filter -> fused route+extract
+(Arrow UDF) -> per-url dedup -> extracted write -> [delta: changed
+docs] -> chunk (mapInPandas) -> chunks write -> embed -> vectors
+write -> lineage write -> [vector-index puts/deletes] -> [upsert] ->
+manifest commit for the batch. Works identically from
 `python jobs/ingest.py` in local mode (the sandbox has no cluster).
+
+One materialized batch (_ingest_batch): the extracted batch, its
+chunks and their vectors are each persisted, written once and fed on
+from memory. The extracted batch feeds the chunker (through
+changed_docs in delta mode), lineage and upsert_latest; the chunks feed
+the embedder and the stale-key delete set; the vectors feed the
+vector-index puts. The job reads back none of the tables it writes,
+and a batch unpersists what it cached before the next one starts.
 
 Incremental commit (SURVEY.md §3.3 step 4): the manifest is updated
 after EVERY batch, not once at job end, so a crash mid-run loses at
@@ -34,7 +43,7 @@ vectors by (pbucket) alone — pbucket is a pure function of url, so it
 is recomputable on chunk/vector rows without carrying warc_ts through
 the chunker, and it matches the batch commit unit exactly (a re-done
 batch dynamically overwrites exactly its own pbucket partitions).
-Lineage is partitioned by (run_id, pbatch) and dynamically overwritten
+Lineage is partitioned by (run_id, pbucket) and dynamically overwritten
 per batch — a re-done batch REPLACES its lineage rows instead of
 double-appending them.
 """
@@ -82,10 +91,10 @@ METRIC_KEYS = (
 
 
 def _has_parquet_files(path: str) -> bool:
-    """True if any parquet data file exists under path — a freshly
-    dynamic-overwritten table dir can exist with ZERO files when every
-    written row was filtered out upstream, and reading it back would
-    fail schema inference."""
+    """True if any parquet data file exists under path. Not called by
+    the job, which gates its empty cases on counts of the persisted
+    batch; kept only because ingestbench's tracer patches it by name
+    (ingestbench/measure.py `_CALLS`)."""
     for dirpath, _dirs, files in os.walk(path):
         if any(f.endswith(".parquet") for f in files):
             return True
@@ -100,6 +109,170 @@ def _batches(n_batches: int) -> list[list[str]]:
         [str(k) for k in range(HOST_BUCKETS) if k % n_batches == b]
         for b in range(n_batches)
     ]
+
+
+def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
+    """Extract, chunk, embed, trace and sink one commit batch of
+    `pages` (host buckets `buckets`), adding its counts to `totals`.
+    Every table is computed from frames this call holds: the extracted
+    batch, its chunks and their vectors are each persisted once,
+    written once and fed on from memory — the job never reads back a
+    table it writes. The persisted frames are appended to `cached`;
+    the caller unpersists them. Returns False for an empty batch,
+    which writes nothing past `extracted`."""
+    from engine.partitioning import host_bucket_col, with_write_partitions
+
+    def keep(df):
+        cached.append(df.persist())
+        return df
+
+    extracted = build_extracted(
+        pages.drop("part_key"), num_partitions=args.partitions
+    )
+    extracted, obs = observe_extraction(extracted, name=f"extract_b{bi}")
+    extracted = keep(with_write_partitions(extracted))
+    write_table(
+        extracted,
+        os.path.join(args.output, "extracted"),
+        partition_by=["day", "pbucket"],
+    )
+    metrics = obs.get
+    for k in METRIC_KEYS:
+        totals[k] += int(metrics.get(k) or 0)
+    n_rows = int(metrics.get("rows") or 0)
+    if not n_rows:
+        # no input hashed into these buckets — routine on concentrated
+        # inputs, e.g. a single-host re-crawl: nothing to chunk, embed
+        # or trace
+        return False
+
+    chunk_src = extracted
+    n_changed = None
+    if args.delta_against:
+        # re-crawl delta: chunk/embed ONLY docs whose content is new vs
+        # the prior corpus — unchanged re-crawls keep their existing
+        # chunks/vectors (engine/pipeline.changed_docs), so embed cost
+        # scales with the change rate, not crawl size
+        from engine.pipeline import changed_docs
+
+        chunk_src = keep(
+            changed_docs(
+                spark.read.parquet(args.delta_against),
+                extracted,
+                buckets=buckets,
+            )
+        )
+        n_changed = chunk_src.count()
+        totals["docs_changed"] = totals.get("docs_changed", 0) + n_changed
+        totals["docs_unchanged_skipped"] = totals.get(
+            "docs_unchanged_skipped", 0
+        ) + (n_rows - n_changed)
+
+    chunks = vectors = None
+    if n_changed != 0:
+        # an all-unchanged delta batch (n_changed == 0) writes no
+        # chunks; a batch whose docs all chunk to nothing (extraction
+        # errors / empty text only) writes an empty chunks partition
+        # set and no vectors. Each table is written BEFORE it is
+        # counted or fed on, so the write is the action that fills the
+        # cache.
+        chunks = keep(
+            build_chunks(chunk_src).withColumn(
+                "pbucket", host_bucket_col("url", HOST_BUCKETS)
+            )
+        )
+        write_table(
+            chunks, os.path.join(args.output, "chunks"), partition_by=["pbucket"]
+        )
+        if chunks.count():
+            vectors = keep(
+                build_vectors(chunks).withColumn(
+                    "pbucket", host_bucket_col("url", HOST_BUCKETS)
+                )
+            )
+            write_table(
+                vectors,
+                os.path.join(args.output, "vectors"),
+                partition_by=["pbucket"],
+            )
+
+    # lineage partitioned by the STABLE bucket key, not the batch
+    # index: a resume (or rerun) with a different --commit-batches
+    # regroups buckets into different batches, and a batch-index
+    # partition key would then dynamic-overwrite other batches'
+    # committed trailers. Keyed by pbucket, a re-done bucket overwrites
+    # exactly its own lineage rows, mirroring the data commit.
+    write_table(
+        build_lineage(extracted, args.run_id, by="pbucket"),
+        os.path.join(args.output, "lineage"),
+        partition_by=["run_id", "pbucket"],
+    )
+
+    if args.vector_index:
+        # maintain the EXTERNAL vector index alongside the tables: put
+        # this batch's (delta) vectors, and in delta mode also delete
+        # the keys a changed doc's prior chunking produced that its new
+        # chunking no longer does (stale tail / now-empty docs).
+        # Idempotent per batch: a re-done batch re-puts/re-deletes the
+        # same (gen, pid, seq) requests. The EFFECTIVE gen folds in the
+        # commit-batch ordinal: every batch is a separate Spark job
+        # whose partition ids restart at 0, so a shared gen would make
+        # batch 2's request files overwrite batch 1's (review r3 —
+        # measured: 2636 puts, 620 surviving keys). Batches hold
+        # disjoint host buckets, so inter-batch gen order is immaterial.
+        from engine.io.vector_sink import sink_vector_deletes, sink_vectors
+
+        batch_gen = args.vector_gen * VECTOR_GEN_STRIDE + bi
+        if vectors is not None:
+            n_put = (
+                sink_vectors(
+                    vectors,
+                    args.vector_index_name,
+                    args.vector_index,
+                    gen=batch_gen,
+                )
+                .agg(F.sum("n_vectors"))
+                .collect()[0][0]
+            )
+            totals["vectors_put"] = totals.get("vectors_put", 0) + int(
+                n_put or 0
+            )
+        if args.delta_against and n_changed:
+            from engine.pipeline import stale_chunk_keys
+
+            if not args.prior_chunks:
+                raise SystemExit(
+                    "--vector-index with --delta-against needs "
+                    "--prior-chunks (the prior chunks table) to "
+                    "compute the stale-key delete set"
+                )
+            stale = stale_chunk_keys(
+                spark.read.parquet(args.prior_chunks),
+                chunks,
+                chunk_src.select("url"),
+                buckets=buckets,
+            )
+            n_del = (
+                sink_vector_deletes(
+                    stale,
+                    args.vector_index_name,
+                    args.vector_index,
+                    gen=batch_gen,
+                )
+                .agg(F.sum("n_vectors"))
+                .collect()[0][0]
+            )
+            totals["vector_keys_deleted"] = totals.get(
+                "vector_keys_deleted", 0
+            ) + int(n_del or 0)
+
+    if args.upsert_into:
+        # fold this batch's rows into the existing corpus table IN
+        # PLACE — only affected partitions are read or written
+        # (engine/pipeline.upsert_latest). Idempotent: a re-done batch
+        # upserts the same rows to the same winners.
+        upsert_latest(spark, args.upsert_into, extracted)
+    return True
 
 
 def run(args) -> dict:
@@ -167,8 +340,6 @@ def run(args) -> dict:
         if args.resume
         else set()
     )
-    from engine.partitioning import host_bucket_col, with_write_partitions
-
     ex_path = os.path.join(args.output, "extracted")
     totals = dict.fromkeys(METRIC_KEYS, 0)
     n_committed = 0
@@ -177,173 +348,14 @@ def run(args) -> dict:
         if not todo:
             continue
         pages = load_pages().filter(F.col("part_key").isin(todo))
-        extracted = build_extracted(
-            pages.drop("part_key"), num_partitions=args.partitions
-        )
-        extracted, obs = observe_extraction(extracted, name=f"extract_b{bi}")
-        extracted = with_write_partitions(extracted)
-        write_table(extracted, ex_path, partition_by=["day", "pbucket"])
-        metrics = obs.get
-        for k in METRIC_KEYS:
-            totals[k] += int(metrics.get(k) or 0)
-
-        if not int(metrics.get("rows") or 0):
-            # empty batch (no input hashed into these buckets — routine
-            # on concentrated inputs, e.g. a single-host re-crawl):
-            # nothing was written, so the read-back below would fail
-            # schema inference on a table that does not exist yet.
-            # Commit the batch as done and move on.
-            checkpoint.mark_done(args.output, args.run_id, batch_keys)
-            n_committed += 1
-            continue
-
-        # read back ONLY this batch's partitions (partition-pruned:
-        # pbucket values == the batch's part_key values by construction)
-        batch_ints = [int(k) for k in todo]
-        extracted_rd = spark.read.parquet(ex_path).filter(
-            F.col("pbucket").isin(batch_ints)
-        )
-        chunk_src = extracted_rd
-        if args.delta_against:
-            # re-crawl delta: chunk/embed ONLY docs whose content is
-            # new vs the prior corpus — unchanged re-crawls keep their
-            # existing chunks/vectors (engine/pipeline.changed_docs),
-            # so embed cost scales with the change rate, not crawl size
-            from engine.pipeline import changed_docs
-
-            prior_ex = spark.read.parquet(args.delta_against)
-            chunk_src = changed_docs(
-                prior_ex, extracted_rd, buckets=batch_ints
-            ).localCheckpoint(eager=True)
-            n_changed = chunk_src.count()
-            totals["docs_changed"] = totals.get("docs_changed", 0) + n_changed
-            totals["docs_unchanged_skipped"] = totals.get(
-                "docs_unchanged_skipped", 0
-            ) + (int(metrics.get("rows") or 0) - n_changed)
-        else:
-            n_changed = None
-        if n_changed != 0:
-            # n_changed == 0 (an all-unchanged delta batch) writes
-            # nothing: an empty dynamic overwrite is a no-op, and
-            # reading the chunks table back before any batch created
-            # it would fail schema inference
-            chunks = build_chunks(chunk_src).withColumn(
-                "pbucket", host_bucket_col("url", HOST_BUCKETS)
+        cached: list = []
+        try:
+            wrote = _ingest_batch(
+                spark, args, bi, pages, [int(k) for k in todo], totals, cached
             )
-            ch_path = os.path.join(args.output, "chunks")
-            write_table(chunks, ch_path, partition_by=["pbucket"])
-
-            if _has_parquet_files(ch_path):
-                vectors = build_vectors(
-                    spark.read.parquet(ch_path).filter(
-                        F.col("pbucket").isin(batch_ints)
-                    )
-                ).withColumn("pbucket", host_bucket_col("url", HOST_BUCKETS))
-                write_table(
-                    vectors,
-                    os.path.join(args.output, "vectors"),
-                    partition_by=["pbucket"],
-                )
-            # else: every doc in this batch chunked to nothing
-            # (extraction errors / empty text only) — the chunks dir
-            # exists but holds no files, and reading it back for the
-            # embed stage would fail schema inference
-
-        # lineage partitioned by the STABLE bucket key, not the batch
-        # index: a resume (or rerun) with a different --commit-batches
-        # regroups buckets into different batches, and a batch-index
-        # partition key would then dynamic-overwrite other batches'
-        # committed trailers. Keyed by pbucket, a re-done bucket
-        # overwrites exactly its own lineage rows, mirroring the data
-        # commit.
-        lineage = build_lineage(extracted_rd, args.run_id, by="pbucket")
-        write_table(
-            lineage,
-            os.path.join(args.output, "lineage"),
-            partition_by=["run_id", "pbucket"],
-        )
-
-        if args.vector_index:
-            # maintain the EXTERNAL vector index alongside the tables:
-            # put this batch's (delta) vectors, and in delta mode also
-            # delete the keys a changed doc's prior chunking produced
-            # that its new chunking no longer does (stale tail / now-
-            # empty docs). Idempotent per batch: a re-done batch
-            # re-puts/re-deletes the same (gen, pid, seq) requests.
-            # The EFFECTIVE gen folds in the commit-batch ordinal:
-            # every batch is a separate Spark job whose partition ids
-            # restart at 0, so a shared gen would make batch 2's
-            # request files overwrite batch 1's (review r3 — measured:
-            # 2636 puts, 620 surviving keys). Batches hold disjoint
-            # host buckets, so inter-batch gen order is immaterial.
-            from engine.io.vector_sink import (
-                sink_vector_deletes,
-                sink_vectors,
-            )
-
-            batch_gen = args.vector_gen * VECTOR_GEN_STRIDE + bi
-            vec_path = os.path.join(args.output, "vectors")
-            if n_changed != 0 and _has_parquet_files(vec_path):
-                batch_vecs = spark.read.parquet(vec_path).filter(
-                    F.col("pbucket").isin(batch_ints)
-                )
-                n_put = (
-                    sink_vectors(
-                        batch_vecs,
-                        args.vector_index_name,
-                        args.vector_index,
-                        gen=batch_gen,
-                    )
-                    .agg(F.sum("n_vectors"))
-                    .collect()[0][0]
-                )
-                totals["vectors_put"] = totals.get("vectors_put", 0) + int(
-                    n_put or 0
-                )
-            if args.delta_against and n_changed:
-                from engine.pipeline import stale_chunk_keys
-
-                if not args.prior_chunks:
-                    raise SystemExit(
-                        "--vector-index with --delta-against needs "
-                        "--prior-chunks (the prior chunks table) to "
-                        "compute the stale-key delete set"
-                    )
-                ch_path = os.path.join(args.output, "chunks")
-                if _has_parquet_files(ch_path):
-                    new_ch = spark.read.parquet(ch_path).filter(
-                        F.col("pbucket").isin(batch_ints)
-                    )
-                else:  # every changed doc chunked to nothing
-                    new_ch = spark.createDataFrame(
-                        [], "url string, chunk_ix int"
-                    )
-                stale = stale_chunk_keys(
-                    spark.read.parquet(args.prior_chunks),
-                    new_ch,
-                    chunk_src.select("url"),
-                    buckets=batch_ints,
-                )
-                n_del = (
-                    sink_vector_deletes(
-                        stale,
-                        args.vector_index_name,
-                        args.vector_index,
-                        gen=batch_gen,
-                    )
-                    .agg(F.sum("n_vectors"))
-                    .collect()[0][0]
-                )
-                totals["vector_keys_deleted"] = totals.get(
-                    "vector_keys_deleted", 0
-                ) + int(n_del or 0)
-
-        if args.upsert_into:
-            # fold this batch's rows into the existing corpus table
-            # IN PLACE — only affected partitions are read or written
-            # (engine/pipeline.upsert_latest). Idempotent: a re-done
-            # batch upserts the same rows to the same winners.
-            upsert_latest(spark, args.upsert_into, extracted_rd)
+        finally:
+            for df in cached:
+                df.unpersist()
 
         # the batch is durably written (idempotent per-partition
         # overwrites) — commit it. Snapshot FIRST, mark_done second:
@@ -353,7 +365,9 @@ def run(args) -> dict:
         # recorded, silently hiding its files from --since-snapshot
         # incremental consumers (review r3). Crash before either line
         # re-does the batch; crash after both skips it on --resume.
-        commit_snapshot(ex_path, operation=f"ingest-batch:{args.run_id}")
+        # An empty batch wrote no rows and commits no snapshot.
+        if wrote:
+            commit_snapshot(ex_path, operation=f"ingest-batch:{args.run_id}")
         checkpoint.mark_done(args.output, args.run_id, batch_keys)
         n_committed += 1
 

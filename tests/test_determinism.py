@@ -78,3 +78,16 @@ def test_sweep_dead_spill_dirs(tmp_path):
     assert (base / "not-a-pid").exists()
     # total on a missing base
     assert sweep_dead_spill_dirs(str(tmp_path / "missing")) == []
+
+
+def test_host_driver_memory_fits_the_host():
+    """get_spark's default driver heap is a quarter of RAM, clamped to
+    1g..24g, and maxResultSize a quarter of the heap; an unreadable
+    MemTotal keeps the old fixed 24g/4g."""
+    from engine.session import host_driver_memory
+
+    gib = 1 << 20  # KiB per GiB
+    assert host_driver_memory(16 * gib) == ("4096m", "1024m")
+    assert host_driver_memory(2 * gib) == ("1024m", "256m")
+    assert host_driver_memory(512 * gib) == ("24576m", "6144m")
+    assert host_driver_memory(None) == ("24g", "4g")

@@ -100,3 +100,71 @@ def test_total_on_arbitrary_bytes():
     for raw in payloads:
         out = extract_html(raw)  # must not raise
         assert isinstance(out, str)
+
+
+def _flate_page_pdf(padding: int) -> bytes:
+    """One-page text PDF whose FlateDecode content stream draws "hello"
+    and then inflates `padding` more bytes of spaces — compressed
+    chunk by chunk, so the bomb is built without ever holding it."""
+    import zlib
+
+    from engine.synth.pdfgen import _assemble
+
+    z = zlib.compressobj(9)
+    parts = [z.compress(b"BT /F1 12 Tf 72 720 Td (hello) Tj ET\n")]
+    block = b" " * (1 << 20)
+    for _ in range(padding >> 20):
+        parts.append(z.compress(block))
+    parts.append(z.compress(b" " * (padding & ((1 << 20) - 1))))
+    parts.append(z.flush())
+    body = b"".join(parts)
+    return _assemble(
+        [
+            b"<< /Type /Catalog /Pages 2 0 R >>",
+            b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
+            b" /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(body)
+            + body
+            + b"\nendstream",
+            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        ]
+    )
+
+
+def test_pdf_flate_bomb_decodes_to_nothing_within_the_cap():
+    """A page stream that inflates to 4x MAX_STREAM_BYTES from ~64 KiB
+    decodes to b"" (the malformed-input contract) on both PDF routes,
+    and the inflate stops at the cap instead of materializing the bomb:
+    traced peak memory stays under 3x the cap, where an unbounded
+    inflate holds at least 4x (zlib joins its output blocks at the
+    end, so a decode briefly holds two copies of what it returns)."""
+    import tracemalloc
+
+    from engine.kernels import pdf_textlayer
+    from engine.kernels.ocr import extract_ocr_text
+
+    cap = pdf_textlayer.MAX_STREAM_BYTES
+    assert pdf_textlayer.extract_pdf_text(_flate_page_pdf(0)) == "hello"
+    bomb = _flate_page_pdf(4 * cap)
+    assert len(bomb) < cap // 64
+    tracemalloc.start()
+    try:
+        text = pdf_textlayer.extract_pdf_text(bomb)
+        ocr = extract_ocr_text(bomb)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert text == "" and ocr == ""
+    assert cap < peak < 3 * cap
+
+
+def test_pdf_lzw_decode_is_capped(monkeypatch):
+    """LZWDecode output counts against the same cap as FlateDecode."""
+    from engine.kernels import pdf_textlayer
+    from engine.synth.pdfgen import make_filtered_pdf
+
+    raw = make_filtered_pdf(["capped words " * 200], "lzw")
+    assert "capped words" in pdf_textlayer.extract_pdf_text(raw)
+    monkeypatch.setattr(pdf_textlayer, "MAX_STREAM_BYTES", 1000)
+    assert pdf_textlayer.extract_pdf_text(raw) == ""
