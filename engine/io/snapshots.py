@@ -13,10 +13,10 @@ the part that makes a table more than a directory:
                                      preserved via basePath)
     incremental_read(spark, path,    CDC-style: ONLY the files added
                       after=M)       after snapshot M — how downstream
-                                     incremental consumers (dedup index
-                                     update, curation of a new crawl)
-                                     get "the new batch" without the
-                                     producer handing it to them
+                                     incremental consumers (e.g.
+                                     curation of a new crawl) get "the
+                                     new batch" without the producer
+                                     handing it to them
     expire_snapshots(path, keep)     metadata GC
 
 Scale shape: a snapshot is a JSON manifest of relative file paths +

@@ -4,9 +4,6 @@ Pipeline shape (SURVEY.md §2 LLM-ops):
 
     minhash_candidate_pairs      shingle -> minhash sig -> band hash ->
                                  bucket equi-join -> candidate pairs
-    jaccard_verify (optional)    exact shingle-set Jaccard over the
-                                 candidates only (kills LSH false
-                                 positives before clustering)
     engine.ops.graph.dedup_clusters
                                  pairs -> connected components ->
                                  (doc_id, cluster_id, is_canonical)
@@ -22,24 +19,17 @@ Scale notes:
     stay linked through the minimum). Pair-level consumers see fewer
     raw pairs from hot buckets — a disclosed precision/recall
     trade-off, not a silent drop. CAVEAT: if a verification filter
-    (jaccard_verify, or simhash hamming) runs BETWEEN star-pairing and
+    (the simhash hamming filter) runs BETWEEN star-pairing and
     clustering, members whose only link was a star pair that fails
     verification end up in separate clusters — the cap + verify
-    combination trades hot-bucket recall for boundedness (see
-    jobs/dedup.py --hot-bucket-cap help).
-  * verification joins text onto the PAIRS (a small fraction of docs),
-    so the heavy text column crosses a shuffle only pairs-many times,
-    twice — never docs x docs.
+    combination trades hot-bucket recall for boundedness.
   * at 10^12 docs the signature table is materialized to storage
     between runs; here `persist()` marks the same reuse seam.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from engine.kernels import fingerprint as fp
 from engine.udfs import minhash_udf
@@ -79,11 +69,7 @@ def _split_hot_buckets(
         .localCheckpoint(eager=True)
     )
     if stats is not None:
-        # accumulate — incremental_candidate_pairs splits both the
-        # index side and the batch side; the caller sees the sum
-        stats["hot_buckets"] = stats.get("hot_buckets", 0) + (
-            hot_b.select("band", "bh").distinct().count()
-        )
+        stats["hot_buckets"] = hot_b.select("band", "bh").distinct().count()
     return cold_b, hot_b
 
 
@@ -122,27 +108,20 @@ def minhash_bands(
     text_col: str = "text",
     n_bands: int = 8,
     rows_per_band: int = 4,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, text) -> the LSH band table (doc_id, band, bh[, carried]).
+    """(id, text) -> the LSH band table (doc_id, band, bh).
 
-    This is the materialization seam: batch dedup self-joins it
-    (minhash_candidate_pairs), streaming dedup stream-static-joins new
-    docs against a persisted copy of it (engine.streaming.
-    neardup_stream — which carries the event-time column through via
-    carry_cols so the stream's watermark survives). n_bands x
-    rows_per_band must not exceed the minhash signature length
+    minhash_candidate_pairs self-joins it. n_bands x rows_per_band
+    must not exceed the minhash signature length
     (engine.kernels.fingerprint.MINHASH_K).
     """
     if n_bands * rows_per_band > fp.MINHASH_K:
         raise ValueError(
             f"{n_bands}x{rows_per_band} exceeds MINHASH_K={fp.MINHASH_K}"
         )
-    carry = [F.col(c) for c in carry_cols]
     sigs = docs.select(
         F.col(id_col).alias("doc_id"),
         minhash_udf(F.col(text_col)).alias("sig"),
-        *carry,
     )
     return sigs.select(
         "doc_id",
@@ -154,8 +133,7 @@ def minhash_bands(
                 ]
             )
         ).alias("band", "band_sig"),
-        *carry,
-    ).select("doc_id", "band", F.hash("band_sig").alias("bh"), *carry)
+    ).select("doc_id", "band", F.hash("band_sig").alias("bh"))
 
 
 def minhash_candidate_pairs(
@@ -253,10 +231,8 @@ def hash64_bands(
     hashed: DataFrame, n_bands: int = 4, bits_per_band: int = 16
 ) -> DataFrame:
     """(doc_id, sim) -> (doc_id, sim, band, bh) bit-slice band rows —
-    the persistable index form of the hamming-banding core (factored
-    out r5 so the streaming media near-dup can band-join arriving
-    hashes against a STATIC table, the hash64 twin of
-    minhash_bands). All JVM bit ops, no Python."""
+    the band table of the hamming-banding core, the hash64 twin of
+    minhash_bands. All JVM bit ops, no Python."""
     if n_bands * bits_per_band > 64:
         raise ValueError("bands exceed the 64-bit fingerprint")
     mask = (1 << bits_per_band) - 1
@@ -285,10 +261,7 @@ def hash64_candidate_pairs(
 ) -> DataFrame:
     """The hamming-banding core over ANY 64-bit fingerprint column:
     hashed(doc_id, sim) -> pairs (doc_a < doc_b, hamming <=
-    max_hamming). simhash_candidate_pairs delegates here; so does
-    image perceptual-hash near-dup (engine/ops/media.image_neardup_
-    pairs, whose ahash is MSB-flip-encoded — XOR hamming is invariant
-    under a shared XOR mask, so the encoding needs no undo). Same
+    max_hamming). simhash_candidate_pairs delegates here. Same
     hot-bucket star-pairing and recall disclosure as simhash."""
     bands = hash64_bands(hashed, n_bands, bits_per_band)
     # localCheckpoint: the self-join otherwise evaluates the simhash
@@ -323,265 +296,3 @@ def hash64_candidate_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-@pandas_udf(DoubleType())
-def _jaccard_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-    out = []
-    for ta, tb in zip(text_a, text_b):
-        sa, sb = fp.shingles(ta or ""), fp.shingles(tb or "")
-        union = len(sa | sb)
-        out.append(len(sa & sb) / union if union else 1.0)
-    return pd.Series(out, dtype="float64")
-
-
-def jaccard_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt_buckets: int | None = 8,
-) -> DataFrame:
-    """Filter candidate pairs to exact shingle-Jaccard >= threshold.
-
-    Adds a `jaccard` column. Text is joined onto the pairs side (pairs
-    << docs at any real dup rate), so each join shuffles only the rows
-    that survive the LSH filter. A doc appearing in many pairs
-    recomputes its shingle set per pair — bounded by the pair count,
-    which verification exists to keep small.
-
-    salt_buckets (default 8): a canonical/hub doc appearing in
-    thousands of candidate pairs is a hot key on the text side — a
-    plain equi-join puts ALL of a hub's pairs (each carrying the
-    joined text payload) in one task. With salting, the text side is
-    first restricted to pair-PARTICIPANT docs (semi-join — so the
-    K-fold explode inside salted_join duplicates only docs that occur
-    in pairs, never the corpus) and each text join runs through
-    engine.partitioning.salted_join, spreading a hub's pairs over K
-    tasks. Result-invariant (salting never changes join output);
-    None restores the plain joins.
-    """
-    ta = docs.select(
-        F.col(id_col).alias("doc_a"), F.col(text_col).alias("_text_a")
-    )
-    tb = docs.select(
-        F.col(id_col).alias("doc_b"), F.col(text_col).alias("_text_b")
-    )
-    if salt_buckets:
-        from engine.partitioning import salted_join
-
-        ta = ta.join(pairs.select("doc_a").distinct(), "doc_a", "left_semi")
-        tb = tb.join(pairs.select("doc_b").distinct(), "doc_b", "left_semi")
-        # salt on the slim pair key, not big.columns: after the first
-        # join the big side carries _text_a, and hashing a full document
-        # per pair row just to pick a salt bucket wastes exactly the CPU
-        # this path exists to save
-        keys = ["doc_a", "doc_b"]
-        joined = salted_join(
-            salted_join(pairs, ta, "doc_a", salt_buckets, salt_cols=keys),
-            tb,
-            "doc_b",
-            salt_buckets,
-            salt_cols=keys,
-        )
-    else:
-        joined = pairs.join(ta, "doc_a").join(tb, "doc_b")
-    return (
-        joined.withColumn("jaccard", _jaccard_udf("_text_a", "_text_b"))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .drop("_text_a", "_text_b")
-    )
-
-
-def passage_neardup_doc_pairs(
-    chunks: DataFrame,
-    doc_col: str = "url",
-    pos_col: str = "chunk_ix",
-    text_col: str = "chunk_text",
-    min_shared: int = 2,
-    n_bands: int = 8,
-    rows_per_band: int = 4,
-    hot_bucket_cap: int | None = HOT_BUCKET_CAP,
-) -> DataFrame:
-    """Doc pairs that share near-duplicate PASSAGES — the partial-
-    overlap case document-level LSH misses (one doc quoting or
-    embedding another scores low whole-doc Jaccard but high
-    passage overlap; cf. Lee et al. 2022, "Deduplicating Training
-    Data Makes Language Models Better", which dedups at substring
-    granularity for exactly this reason).
-
-    Runs the SAME banded minhash machinery over the chunks table
-    (chunk id = doc + "\\x1f" + position, so the doc of a chunk is a
-    substring — no join back to the chunks table), drops same-doc
-    chunk pairs, and aggregates to (doc_a, doc_b, n_shared, frac_a,
-    frac_b). doc_a < doc_b; n_shared counts matching CHUNK PAIRS
-    between the two docs, while frac_a/frac_b are each side's
-    DISTINCT matched chunks over its chunk count (so three near-
-    identical chunks in B all matching A's one chunk give n_shared=3
-    but frac_a=1.0, never an impossible 3.0).
-
-    Scale shape inherits minhash_candidate_pairs (banded equi-join +
-    hot-bucket star-pairing; under star-pairing a hot boilerplate
-    passage contributes n-1 pairs instead of n(n-1)/2, so n_shared
-    UNDERCOUNTS through hot buckets — same disclosed trade-off).
-    The per-doc chunk-count joins are keyed equi-joins on the doc id.
-    Assumes doc ids do not contain the \\x1f separator."""
-    cid = F.concat_ws("\x1f", F.col(doc_col), F.col(pos_col).cast("string"))
-    pairs = minhash_candidate_pairs(
-        chunks.select(cid.alias("_cid"), F.col(text_col)),
-        id_col="_cid",
-        text_col=text_col,
-        n_bands=n_bands,
-        rows_per_band=rows_per_band,
-        hot_bucket_cap=hot_bucket_cap,
-    )
-    da = F.substring_index("doc_a", "\x1f", 1)
-    db = F.substring_index("doc_b", "\x1f", 1)
-    lt = da < db  # orient each chunk pair so chunk ids follow docs
-    doc_pairs = (
-        pairs.filter(da != db)
-        .select(
-            F.least(da, db).alias("doc_a"),
-            F.greatest(da, db).alias("doc_b"),
-            F.when(lt, F.col("doc_a")).otherwise(F.col("doc_b")).alias("_ca"),
-            F.when(lt, F.col("doc_b")).otherwise(F.col("doc_a")).alias("_cb"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_shared"),
-            F.countDistinct("_ca").alias("_na"),
-            F.countDistinct("_cb").alias("_nb"),
-        )
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    counts = chunks.groupBy(F.col(doc_col).alias("_d")).agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    return (
-        doc_pairs.join(counts.withColumnRenamed("_d", "doc_a"), "doc_a")
-        .withColumn("frac_a", F.col("_na") / F.col("_n"))
-        .drop("_n")
-        .join(counts.withColumnRenamed("_d", "doc_b"), "doc_b")
-        .withColumn("frac_b", F.col("_nb") / F.col("_n"))
-        .drop("_n")
-        .select("doc_a", "doc_b", "n_shared", "frac_a", "frac_b")
-    )
-
-
-def incremental_candidate_pairs(
-    new_docs: DataFrame,
-    index_bands: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 8,
-    rows_per_band: int = 4,
-    hot_bucket_cap: int | None = HOT_BUCKET_CAP,
-    include_new_pairs: bool = True,
-    stats: dict | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Batch INCREMENTAL near-dup: candidate pairs of a NEW batch of
-    docs against a persisted LSH band index (the minhash_bands layout
-    — same table engine.streaming.neardup_stream joins), plus the
-    new-vs-new pairs within the batch. The existing corpus is NEVER
-    re-fingerprinted and never self-joined: per re-crawl the work is
-    O(new bands + matching index buckets), not O(corpus^2) — the batch
-    analog of the streaming index join, for cron-style re-crawl
-    ingestion.
-
-    Returns (pairs, new_bands): pairs as (doc_a < doc_b, src) where
-    src = 'index' for new-vs-corpus collisions and 'batch' for
-    new-vs-new (a pair produced by both paths — possible only when an
-    id was re-ingested — records 'index', the corpus collision); note
-    that a re-ingested id never collides with its OWN index entry
-    (self-pairs are excluded), so id-level re-ingestion must be
-    handled by the caller with an id membership check against the
-    index — jobs/dedup.py does. new_bands is the batch's
-    localCheckpointed band table, ready to union-append to the index
-    (jobs/dedup.py --update-index materializes old ∪ new).
-
-    Hot-index buckets (occupancy > hot_bucket_cap) mirror the
-    streaming saturation rule: a new doc star-links to the bucket's
-    MINIMUM index doc only — connectivity through the bucket is
-    preserved for clustering, fan-out per new doc is O(1), and the
-    O(new_in_bucket x index_in_bucket) blowup a boilerplate bucket
-    would cause is gone. The new-vs-new self-join reuses the standard
-    hot-bucket guard.
-    """
-    new_bands = minhash_bands(
-        new_docs, id_col, text_col, n_bands, rows_per_band
-    ).localCheckpoint(eager=True)
-    if stats is not None:
-        stats.setdefault("hot_buckets", 0)
-
-    # Restrict the index to buckets the batch actually touches BEFORE
-    # the hot-bucket guard and the join: one semi-join pass (AQE picks
-    # broadcast when the batch is small) instead of guard-probing and
-    # window-splitting the whole corpus-sized index on every re-crawl.
-    # Buckets with no batch member can never produce a pair, and a hot
-    # bucket the batch never touches needs no saturation handling.
-    # localCheckpoint: the restricted slice is O(matching buckets) and
-    # feeds the guard probe + split + join, so materialize it once.
-    batch_buckets = new_bands.select("band", "bh").distinct()
-    idx = (
-        index_bands.select("doc_id", "band", "bh")
-        .join(batch_buckets, ["band", "bh"], "semi")
-        .localCheckpoint(eager=True)
-    )
-    if hot_bucket_cap and _has_hot_bucket(idx, hot_bucket_cap):
-        cold_idx, hot_idx = _split_hot_buckets(idx, hot_bucket_cap, stats)
-        hot_reps = hot_idx.groupBy("band", "bh").agg(
-            F.min("doc_id").alias("doc_id")
-        )
-        # saturated buckets: join the representative only (broadcast —
-        # there are at most a handful of hot buckets by construction)
-        idx_join = cold_idx.unionByName(hot_reps)
-    else:
-        idx_join = idx
-
-    n = new_bands.select("doc_id", "band", "bh").alias("n")
-    i = idx_join.alias("i")
-    cross = (
-        n.join(
-            i,
-            (F.col("n.band") == F.col("i.band"))
-            & (F.col("n.bh") == F.col("i.bh"))
-            & (F.col("n.doc_id") != F.col("i.doc_id")),
-        )
-        .select(
-            F.least(F.col("n.doc_id"), F.col("i.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("i.doc_id")).alias("doc_b"),
-            F.lit("index").alias("src"),
-        )
-    )
-    pairs = cross
-    if include_new_pairs:
-        self_bands = new_bands
-        hot_pairs = None
-        if hot_bucket_cap and _has_hot_bucket(new_bands, hot_bucket_cap):
-            self_bands, hot_b = _split_hot_buckets(
-                new_bands, hot_bucket_cap, stats
-            )
-            hot_pairs = _star_pairs(hot_b)
-        a = self_bands.alias("a")
-        b = self_bands.alias("b")
-        within = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        if hot_pairs is not None:
-            within = within.unionByName(hot_pairs)
-        pairs = pairs.unionByName(
-            within.withColumn("src", F.lit("batch"))
-        )
-    # A pair produced by BOTH paths (possible when a member's id is in
-    # both the batch and the index — a re-ingestion) must keep the
-    # 'index' label: it records a collision with the existing corpus,
-    # which the caller uses to drop the batch copy. max works because
-    # 'index' > 'batch' lexicographically.
-    dedup = pairs.groupBy("doc_a", "doc_b").agg(F.max("src").alias("src"))
-    return dedup, new_bands

@@ -171,80 +171,3 @@ def dedup_clusters(
     return out.withColumn(
         "is_canonical", (F.col(id_col) == F.col("cluster_id")).cast("int")
     )
-
-
-def incremental_dedup_clusters(
-    batch_docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    reingested: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental-mode verdicts: batch docs + candidate pairs against
-    a corpus index -> (dropped_vs_corpus, clusters).
-
-    `pairs` is (doc_a, doc_b, src) from incremental_candidate_pairs:
-    src='index' pairs link a batch doc to a CORPUS doc, src='batch'
-    pairs link batch docs to each other. `reingested` (optional) holds
-    batch ids already present in the index — they stand for corpus
-    docs too.
-
-    The drop decision is COMPONENT-level, not neighbor-level: connected
-    components run over ALL pairs at once, and every batch doc in a
-    component containing a corpus id (index side of an 'index' pair, or
-    a reingested id) is a duplicate of the corpus — including docs
-    linked to it only TRANSITIVELY through another dropped batch doc
-    (X matches corpus doc C, Y matches X but shares no band with C:
-    full-mode clustering over old ∪ new would drop Y, so incremental
-    mode must as well). Components containing no corpus id cluster
-    among themselves exactly as dedup_clusters would.
-
-    One connected-components run serves both verdicts (the component
-    ids of corpus-free components equal what clustering the surviving
-    batch pairs alone would produce — the component sets are
-    identical), so this costs no more than the old neighbor-level rule.
-    """
-    new_ids = batch_docs.select(F.col(id_col)).distinct()
-    # corpus anchors: the index side of 'index' pairs (an id NOT in the
-    # batch), plus any reingested batch ids (the corpus copy exists)
-    anchors = (
-        pairs.filter(F.col("src") == "index")
-        .select(F.explode(F.array("doc_a", "doc_b")).alias(id_col))
-        .distinct()
-        .join(new_ids, id_col, "anti")
-    )
-    if reingested is not None:
-        anchors = anchors.unionByName(
-            reingested.select(F.col(id_col))
-        ).distinct()
-    comp = connected_components(
-        pairs, src="doc_a", dst="doc_b"
-    ).localCheckpoint(eager=True)
-    tainted = (
-        comp.join(
-            anchors.withColumnRenamed(id_col, "node"), "node", "semi"
-        )
-        .select("component")
-        .distinct()
-    )
-    dropped = (
-        comp.join(tainted, "component", "semi")
-        .select(F.col("node").alias(id_col))
-        .join(new_ids, id_col, "semi")
-    )
-    if reingested is not None:
-        dropped = dropped.unionByName(
-            reingested.select(F.col(id_col))
-        ).distinct()
-    clusters = (
-        new_ids.join(dropped, id_col, "anti")
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
-        )
-        .withColumn(
-            "is_canonical",
-            (F.col(id_col) == F.col("cluster_id")).cast("int"),
-        )
-    )
-    return dropped, clusters

@@ -119,72 +119,3 @@ def build_media_frames(media: DataFrame, hop: int = 256) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(
         _frames_batches(hop), FRAMES_DDL
     )
-
-
-def image_neardup_pairs(
-    features: DataFrame,
-    max_hamming: int = 6,
-    n_bands: int = 8,
-    bits_per_band: int = 8,
-    hot_bucket_cap: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Perceptual near-dup image pairs from the feature table:
-    (media_a < media_b, hamming) over the 64-bit average-hash.
-
-    Reuses the text SimHash banding core (engine/ops/dedup.
-    hash64_candidate_pairs) — an equi-join on exact-matching bit
-    slices, never all-pairs — which is the published discipline for
-    hamming-space dedup at crawl scale. The ahash column is the
-    MSB-flip signed encoding from the decode kernel; XOR hamming is
-    invariant under a mask shared by both sides, so no undo is needed.
-
-    Defaults keep the pigeonhole recall GUARANTEE: max_hamming <
-    n_bands (6 < 8) means any qualifying pair shares at least one
-    exact 8-bit band, so candidate generation misses nothing. Raising
-    max_hamming to n_bands or beyond turns the op approximate —
-    disclose the recall trade-off if you do.
-
-    Input is build_media_features output (or any frame with media_id
-    + ahash); rows without a decoded hash (non-images, stub codecs,
-    decode errors) are screened out here, so callers can pass the
-    whole feature table. hot_bucket_cap defaults off: a degenerate
-    bucket for IMAGES means thousands of near-identical assets
-    (tracking pixels, logos) — usually exactly what the caller wants
-    paired; pass a cap when that fan-out must be bounded."""
-    from engine.ops.dedup import hash64_candidate_pairs
-
-    hashed = features.filter(F.col("ahash").isNotNull()).select(
-        F.col("media_id").alias("doc_id"), F.col("ahash").alias("sim")
-    )
-    pairs = hash64_candidate_pairs(
-        hashed,
-        max_hamming=max_hamming,
-        n_bands=n_bands,
-        bits_per_band=bits_per_band,
-        hot_bucket_cap=hot_bucket_cap,
-        stats=stats,
-    )
-    return pairs.select(
-        F.col("doc_a").alias("media_a"),
-        F.col("doc_b").alias("media_b"),
-        "hamming",
-    )
-
-
-def media_hash_bands(
-    features: DataFrame, n_bands: int = 8, bits_per_band: int = 8
-) -> DataFrame:
-    """Persistable perceptual-hash band index (media_id, sim, band,
-    bh) from a feature table — the media twin of the text corpus's
-    persisted minhash_bands. Band parameters MUST match the
-    stream/query side (engine/streaming.media_neardup_stream and
-    image_neardup_pairs default to the same 8x8 layout, keeping the
-    pigeonhole guarantee for max_hamming < 8). Screens to rows with a
-    decoded ahash, so the whole feature table can be passed."""
-    from engine.ops.dedup import hash64_bands
-
-    hashed = features.filter(F.col("ahash").isNotNull()).select(
-        F.col("media_id").alias("doc_id"), F.col("ahash").alias("sim")
-    )
-    return hash64_bands(hashed, n_bands=n_bands, bits_per_band=bits_per_band)

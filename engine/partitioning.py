@@ -118,10 +118,10 @@ def salted_join(
     skewed; for broadcastable dims prefer F.broadcast (B5).
 
     salt_cols: columns of `big` to derive the salt from (default: all).
-    Pass a slim set when the big side carries wide payloads — e.g.
-    jaccard_verify's second text join salts on (doc_a, doc_b) so the
-    already-joined _text_a payload is not re-hashed per row; spreading
-    is identical as long as the chosen columns are unique-ish per row.
+    Pass a slim set when the big side carries wide payloads (e.g. a
+    pair key instead of an already-joined text column), so the payload
+    is not re-hashed per row; spreading is identical as long as the
+    chosen columns are unique-ish per row.
     """
     salt = F.pmod(
         F.xxhash64(*[F.col(c) for c in (salt_cols or big.columns)]),

@@ -243,7 +243,7 @@ _FNV_LIST_REDUCE = """
     """,
 )
 def q46(spark, sf_dir):
-    # operator lives in engine/ops/dedup.py (shared with jobs/dedup.py)
+    # operator lives in engine/ops/dedup.py (shared with jobs/corpus.py)
     from engine.ops.dedup import minhash_candidate_pairs
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
@@ -950,7 +950,7 @@ ALL = REGISTRY
 
 
 # --------------------------------------------------------------------------
-# D1-D6: streaming extraction, surfaced as a batch-checkable query —
+# D1-D4: streaming extraction, surfaced as a batch-checkable query —
 # writes the corpus as files, consumes them with an availableNow
 # micro-batch stream (watermark + dedup-within-watermark + kernels +
 # idempotent foreachBatch sink), returns the landed rollup.

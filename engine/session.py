@@ -60,9 +60,9 @@ def get_spark(
     """rocksdb_state=True switches Structured Streaming state to the
     RocksDB provider: state lives off-heap/on-disk per executor instead
     of in the JVM heap, which is the only regime that survives the
-    incremental near-dup index's state size at 10^12 docs (streaming
+    dedup-within-watermark state of a crawl-scale url stream (streaming
     jobs enable it; the default HDFSBackedStateStore is fine for tests
-    and small stateful metrics). NOTE: stateStore.providerClass is read
+    and small state). NOTE: stateStore.providerClass is read
     per STREAMING QUERY at start, so setting it on an already-running
     session (spark.conf.set) works too — this flag just pins it at
     session build for the job entrypoints."""

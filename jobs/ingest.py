@@ -240,12 +240,6 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
         if args.delta_against and n_changed:
             from engine.pipeline import stale_chunk_keys
 
-            if not args.prior_chunks:
-                raise SystemExit(
-                    "--vector-index with --delta-against needs "
-                    "--prior-chunks (the prior chunks table) to "
-                    "compute the stale-key delete set"
-                )
             stale = stale_chunk_keys(
                 spark.read.parquet(args.prior_chunks),
                 chunks,
@@ -279,6 +273,15 @@ def run(args) -> dict:
     from engine.cli import fill_defaults
 
     fill_defaults(args, _parser())
+    # flag combinations are checked BEFORE any work, so a bad one
+    # fails with nothing written or put to the index
+    if args.prior_chunks and not args.delta_against:
+        raise SystemExit("--prior-chunks requires --delta-against")
+    if args.vector_index and args.delta_against and not args.prior_chunks:
+        raise SystemExit(
+            "--vector-index with --delta-against needs --prior-chunks "
+            "(the prior chunks table) to compute the stale-key delete set"
+        )
     spark = get_spark(
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
@@ -362,8 +365,8 @@ def run(args) -> dict:
         # a crash between the two re-does the batch, which re-commits
         # an equivalent snapshot (harmless duplicate); the reverse
         # order would mark the batch done with no snapshot ever
-        # recorded, silently hiding its files from --since-snapshot
-        # incremental consumers (review r3). Crash before either line
+        # recorded, silently hiding its files from incremental_read
+        # consumers (review r3). Crash before either line
         # re-does the batch; crash after both skips it on --resume.
         # An empty batch wrote no rows and commits no snapshot.
         if wrote:

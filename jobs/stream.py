@@ -14,11 +14,6 @@ vector-index directory, with per-batch idempotent put files
 (gen=batch_id). --delta-against PRIOR_EXTRACTED embeds only changed
 docs; adding --prior-chunks PRIOR_CHUNKS also DELETES stale
 url#chunk_ix keys of shrunk/emptied re-crawled docs from the index.
-
---neardup-index BANDS_PARQUET switches to near-dup screening: each
-arriving page's MinHash bands join the given static band table (built
-once with engine.ops.dedup.minhash_bands over the existing corpus) and
-matches land as per-batch parquet under --output.
 """
 
 from __future__ import annotations
@@ -59,86 +54,20 @@ def main() -> None:
         "DELETE stale url#chunk_ix keys of shrunk/emptied re-crawled "
         "docs from the index",
     )
-    p.add_argument(
-        "--neardup-index",
-        default=None,
-        help="static minhash band table (parquet); switches to near-dup "
-        "screening of arriving pages against it",
-    )
-    p.add_argument(
-        "--neardup-incremental",
-        action="store_true",
-        help="stream-vs-stream near-dup: every arriving page is checked "
-        "against all previously streamed pages (growing state index)",
-    )
-    p.add_argument(
-        "--media-neardup-index",
-        default=None,
-        help="static perceptual-hash band table (parquet, from "
-        "engine/ops/media.media_hash_bands); switches the input to a "
-        "MEDIA drop and screens arriving assets' ahashes against it",
-    )
     args = p.parse_args()
-    modes = [
-        m
-        for m, on in (
-            ("--vectors", args.vectors),
-            ("--neardup-index", bool(args.neardup_index)),
-            ("--neardup-incremental", args.neardup_incremental),
-            ("--media-neardup-index", bool(args.media_neardup_index)),
-        )
-        if on
-    ]
-    if len(modes) > 1:
-        p.error(f"modes are mutually exclusive, got {' and '.join(modes)}")
-
-    # flag validation BEFORE branching, so a delta flag combined with
-    # a non-vector mode fails loudly instead of being silently dropped
-    # (review r3: --neardup-index + --delta-against ran near-dup with
-    # the delta flags ignored)
+    # flag validation BEFORE any Spark work, so a delta flag without
+    # its prerequisite fails loudly instead of being silently dropped
     if args.prior_chunks and not args.delta_against:
         p.error("--prior-chunks requires --delta-against")
     if (args.prior_chunks or args.delta_against) and not args.vectors:
         p.error("--delta-against/--prior-chunks require --vectors")
     # the job entrypoints run with the RocksDB state store: streaming
-    # state (dedup-within-watermark, the incremental near-dup index)
-    # must not live in the JVM heap at production state sizes
+    # state (dedup-within-watermark) must not live in the JVM heap at
+    # production state sizes
     spark = get_spark(
         master=args.master, app_name="webtext-stream", rocksdb_state=True
     )
-    if args.neardup_incremental:
-        from engine.streaming import start_incremental_neardup_stream
-
-        q = start_incremental_neardup_stream(
-            spark,
-            args.input,
-            args.output,
-            args.checkpoint,
-            available_now=args.once,
-        )
-    elif args.media_neardup_index:
-        from engine.streaming import start_media_neardup_stream
-
-        q = start_media_neardup_stream(
-            spark,
-            args.input,
-            spark.read.parquet(args.media_neardup_index),
-            args.output,
-            args.checkpoint,
-            available_now=args.once,
-        )
-    elif args.neardup_index:
-        from engine.streaming import start_neardup_stream
-
-        q = start_neardup_stream(
-            spark,
-            args.input,
-            spark.read.parquet(args.neardup_index),
-            args.output,
-            args.checkpoint,
-            available_now=args.once,
-        )
-    elif args.vectors:
+    if args.vectors:
         q = start_vector_stream(
             spark,
             args.input,

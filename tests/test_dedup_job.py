@@ -1,14 +1,9 @@
-"""jobs/dedup.py + engine/ops/dedup.py — the near-dup dedup job surface."""
+"""engine/ops/dedup.py — the near-dup candidate-pair operators."""
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
+from engine.ops.dedup import minhash_candidate_pairs
 
-from engine.kernels import fingerprint as fp
-from engine.ops.dedup import jaccard_verify, minhash_candidate_pairs
-
-SF_001 = "/root/testdata/sf0.001"
 SF_01 = "/root/testdata/sf0.01"
 
 
@@ -25,174 +20,6 @@ def test_q45_q46_keep_former_x04_x05_pins(spark):
     fn45, oracle45 = ALL["q45_simhash_pairs"]
     assert oracle45 is not None
     assert fn45(spark, SF_01).count() == 389
-
-
-def test_jaccard_verify_matches_bruteforce(spark):
-    docs = (
-        spark.read.parquet(f"{SF_001}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(40)
-    )
-    pdf = docs.toPandas()
-    pairs = minhash_candidate_pairs(docs)
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in jaccard_verify(pairs, docs, threshold=0.0).collect()
-    }
-    texts = dict(zip(pdf["doc_id"], pdf["text"]))
-    for (a, b), j in got.items():
-        sa, sb = fp.shingles(texts[a] or ""), fp.shingles(texts[b] or "")
-        expect = len(sa & sb) / len(sa | sb) if (sa | sb) else 1.0
-        assert abs(j - expect) < 1e-12, (a, b)
-    # thresholding is monotone: higher cutoff keeps a subset
-    hi = jaccard_verify(pairs, docs, threshold=0.8).count()
-    assert hi <= len(got)
-
-
-def test_dedup_job_end_to_end(spark, tmp_path):
-    import types
-
-    from jobs.dedup import run
-
-    out = str(tmp_path / "dedup_out")
-    args = types.SimpleNamespace(
-        input=f"{SF_001}/documents.parquet",
-        output=out,
-        id_col="doc_id",
-        text_col="text",
-        method="minhash",
-        bands=8,
-        rows_per_band=4,
-        max_hamming=8,
-        verify_jaccard=0.3,
-        master="local[*]",
-        shuffle_partitions=None,
-    )
-    res = run(args)
-    assert res["docs"] == res["kept"] + res["removed"]
-
-    clusters = spark.read.parquet(f"{out}/clusters")
-    docs = spark.read.parquet(args.input)
-    # every doc appears exactly once
-    assert clusters.count() == docs.count()
-    assert clusters.select("doc_id").distinct().count() == docs.count()
-    # canonical = minimum doc_id of its cluster, exactly one per cluster
-    bad = (
-        clusters.groupBy("cluster_id")
-        .agg(
-            F.min("doc_id").alias("mn"),
-            F.sum("is_canonical").alias("n_canon"),
-            F.first("cluster_id").alias("cid"),
-        )
-        .filter((F.col("n_canon") != 1) | (F.col("mn") != F.col("cid")))
-        .count()
-    )
-    assert bad == 0
-    # every verified pair ended up in one cluster
-    pairs = spark.read.parquet(f"{out}/pairs")
-    ca = clusters.select(
-        F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("c_a")
-    )
-    cb = clusters.select(
-        F.col("doc_id").alias("doc_b"), F.col("cluster_id").alias("c_b")
-    )
-    split = (
-        pairs.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .filter(F.col("c_a") != F.col("c_b"))
-        .count()
-    )
-    assert split == 0
-    # kept == number of distinct clusters
-    assert res["kept"] == clusters.select("cluster_id").distinct().count()
-
-
-def test_dedup_job_exact_mode(spark, tmp_path):
-    import types
-
-    from jobs.dedup import run
-
-    docs_path = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [
-            (1, "same text here"),
-            (2, "same text here"),      # exact dup of 1
-            (3, "same text here!"),     # one char off: NOT an exact dup
-            (4, None),
-            (5, None),                  # null == null under coalesce
-        ],
-        "doc_id long, text string",
-    ).write.parquet(docs_path)
-
-    out = str(tmp_path / "exact_out")
-    res = run(
-        types.SimpleNamespace(
-            input=docs_path,
-            output=out,
-            id_col="doc_id",
-            text_col="text",
-            method="exact",
-            bands=8,
-            rows_per_band=4,
-            max_hamming=8,
-            verify_jaccard=None,
-            master="local[*]",
-            shuffle_partitions=None,
-        )
-    )
-    assert res == {
-        "wall_s": res["wall_s"],
-        "docs": 5,
-        "candidate_pairs": 0,
-        "kept": 3,
-        "removed": 2,
-        "dup_rate": 0.4,
-    }
-    got = {
-        r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-        for r in spark.read.parquet(f"{out}/clusters").collect()
-    }
-    assert got == {1: (1, 1), 2: (1, 0), 3: (3, 1), 4: (4, 1), 5: (4, 0)}
-
-
-def test_neardup_modes_screen_empty_texts(spark, tmp_path):
-    """Empty/null texts all share the sentinel fingerprint; they must
-    NOT cross-match (quadratic pair blowup) — each stays a singleton
-    cluster and survives into canonical."""
-    import types
-
-    from jobs.dedup import run
-
-    docs_path = str(tmp_path / "docs")
-    text = " ".join(f"w{i} x{i} y{i}" for i in range(40))
-    spark.createDataFrame(
-        [(1, text), (2, text), (3, None), (4, ""), (5, None)],
-        "doc_id long, text string",
-    ).write.parquet(docs_path)
-
-    out = str(tmp_path / "out")
-    res = run(
-        types.SimpleNamespace(
-            input=docs_path,
-            output=out,
-            id_col="doc_id",
-            text_col="text",
-            method="minhash",
-            bands=8,
-            rows_per_band=4,
-            max_hamming=8,
-            verify_jaccard=None,
-            master="local[*]",
-            shuffle_partitions=None,
-        )
-    )
-    assert res["candidate_pairs"] == 1  # only the real dup pair (1,2)
-    assert res["kept"] == 4  # 1 canonical of {1,2} + three singletons
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in spark.read.parquet(f"{out}/clusters").collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 5}
 
 
 def test_hot_bucket_cap_bounds_fanout_and_preserves_clusters(spark):
@@ -258,79 +85,3 @@ def test_simhash_hot_bucket_cap(spark):
     got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     # identical docs: hamming 0, star-paired against the minimum
     assert got == {(0, i) for i in range(1, 40)}
-
-
-def test_jaccard_verify_salted_equals_plain_on_hub_doc(spark):
-    """Salting the verify text joins is result-invariant — pinned on a
-    hub-doc pair set (one canonical doc in every pair), the exact skew
-    shape the salt exists for."""
-    base = " ".join(f"w{i} x{i} y{i}" for i in range(60))
-    docs = spark.createDataFrame(
-        [(0, base)] + [(i, base + f" suffix{i % 7}") for i in range(1, 120)],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(0, i) for i in range(1, 120)], "doc_a long, doc_b long"
-    )
-
-    def key(df):
-        return {
-            (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-            for r in df.collect()
-        }
-
-    plain = key(jaccard_verify(pairs, docs, threshold=0.5, salt_buckets=None))
-    salted = key(jaccard_verify(pairs, docs, threshold=0.5, salt_buckets=8))
-    assert salted == plain and len(plain) > 0
-
-
-def test_passage_neardup_doc_pairs(spark):
-    """Partial-overlap docs (one embeds another's passages) pair at
-    chunk granularity even though whole-doc similarity is low."""
-    from engine.ops.dedup import passage_neardup_doc_pairs
-
-    def mk(url, texts):
-        return [(url, i, t) for i, t in enumerate(texts)]
-
-    shared1 = "the quick brown fox jumps over the lazy dog near the river bank"
-    shared2 = "a second shared passage about distributed systems and consensus"
-    rows = (
-        mk("docA", ["unique A opening paragraph of original prose", shared1, shared2, "unique A closing words entirely its own"])
-        + mk("docB", ["B starts differently with its own intro", shared1, shared2, "B ends on an unrelated topic too"])
-        + mk("docC", [shared1, "C shares only one single passage with A"])
-        + mk("docD", ["totally unrelated content about gardening", "more gardening tips and tricks here"])
-    )
-    chunks = spark.createDataFrame(rows, ["url", "chunk_ix", "chunk_text"])
-    got = {
-        (r["doc_a"], r["doc_b"]): (r["n_shared"], r["frac_a"], r["frac_b"])
-        for r in passage_neardup_doc_pairs(chunks, min_shared=2).collect()
-    }
-    assert ("docA", "docB") in got
-    n, fa, fb = got[("docA", "docB")]
-    assert n == 2 and fa == 0.5 and fb == 0.5
-    # docC shares only ONE passage with A/B: filtered by min_shared=2
-    assert all("docC" not in k for k in got)
-    assert all("docD" not in k for k in got)
-    # min_shared=1 surfaces the single-passage overlaps
-    got1 = {
-        (r["doc_a"], r["doc_b"]): r["n_shared"]
-        for r in passage_neardup_doc_pairs(chunks, min_shared=1).collect()
-    }
-    assert got1[("docA", "docC")] == 1 and got1[("docB", "docC")] == 1
-
-
-def test_passage_fracs_are_distinct_chunk_based(spark):
-    """Round-3 review finding: three identical chunks in F matching
-    E's single chunk gave frac_e = 3/1 = 3.0 when fractions counted
-    PAIRS; they must count DISTINCT matched chunks per side."""
-    from engine.ops.dedup import passage_neardup_doc_pairs
-
-    passage = "an identical boilerplate passage repeated verbatim everywhere"
-    rows = [("docE", 0, passage)] + [("docF", i, passage) for i in range(3)]
-    chunks = spark.createDataFrame(rows, ["url", "chunk_ix", "chunk_text"])
-    got = passage_neardup_doc_pairs(chunks, min_shared=1).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["doc_a"], r["doc_b"]) == ("docE", "docF")
-    assert r["n_shared"] == 3  # pair count, disclosed semantics
-    assert r["frac_a"] == 1.0 and r["frac_b"] == 1.0  # never > 1

@@ -100,3 +100,38 @@ def test_ingest_releases_every_cached_batch(spark, tmp_path):
     )
     assert res["batches_committed"] == 4 and res["rows"] > 0
     assert persistent_ids() - before == set()
+
+
+def test_bad_flag_combinations_fail_before_any_work(spark, tmp_path):
+    """--vector-index --delta-against without --prior-chunks, and
+    --prior-chunks without --delta-against, stop the job before its
+    first batch: nothing lands under --output and no request reaches
+    the vector index."""
+    import jobs.ingest as ingest
+
+    t1 = dt.datetime(2026, 3, 1, 12)
+    t2 = dt.datetime(2026, 4, 1, 12)
+    in1, in2 = str(tmp_path / "c1"), str(tmp_path / "c2")
+    _pages(
+        spark,
+        [("http://h%d.example.com/p" % i, t1, b"body %d" % i) for i in range(3)],
+    ).write.parquet(in1)
+    _pages(
+        spark,
+        [("http://h%d.example.com/p" % i, t2, b"new body %d" % i) for i in range(3)],
+    ).write.parquet(in2)
+    prior = str(tmp_path / "prior")
+    ingest.run(_ingest_args(prior, input=in1))
+
+    bad = (
+        {"delta_against": os.path.join(prior, "extracted")},
+        {"prior_chunks": os.path.join(prior, "chunks")},
+    )
+    for i, over in enumerate(bad):
+        out, index = tmp_path / f"o{i}", tmp_path / f"index{i}"
+        with pytest.raises(SystemExit):
+            ingest.run(
+                _ingest_args(str(out), input=in2, vector_index=str(index), **over)
+            )
+        assert not (out / "extracted").exists(), over
+        assert not [f for _, _, fs in os.walk(index) for f in fs], over

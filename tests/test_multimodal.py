@@ -224,87 +224,6 @@ def test_x12_media_pipeline_pin(spark):
     assert rows["wav"]["max_peak_energy"] is not None
 
 
-def test_image_neardup_pairs(spark):
-    """Perceptual near-dup over the ahash column: a lightly-perturbed
-    copy pairs with its original; a structurally different image does
-    not. Resulting pairs must equal brute-force hamming over the
-    kernel's own hashes (the banding guarantee: max_hamming=6 <
-    n_bands=8 means at least one 8-bit slice matches exactly, so
-    candidate generation is lossless at the defaults)."""
-    import struct
-    import zlib
-
-    import pandas as pd
-
-    from engine.ops.media import build_media_features, image_neardup_pairs
-
-    def png_from_px(px, w, h):
-        raw = b"".join(
-            b"\x00" + bytes(px[y * w : (y + 1) * w]) for y in range(h)
-        )
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-
-        def chunk(ctype, data):
-            body = ctype + data
-            return (
-                struct.pack(">I", len(data))
-                + body
-                + struct.pack(">I", zlib.crc32(body))
-            )
-
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw))
-            + chunk(b"IEND", b"")
-        )
-
-    w, h = 32, 24
-    base = bytearray((3 * x + 5 * y) & 0xFF for y in range(h) for x in range(w))
-    near = bytearray(base)
-    near[0] ^= 0x80  # flip a single pixel hard
-    far = bytearray(255 - v for v in base)  # inverted: hashes disagree
-    from engine.synth.jpeggen import encode_jpeg_gray
-
-    rows = [
-        (0, png_from_px(base, w, h)),
-        (1, png_from_px(near, w, h)),
-        (2, png_from_px(far, w, h)),
-        (3, b"\xffnot an image"),
-        # r4: the SAME image re-encoded as JPEG must pair with its
-        # PNG original (cross-format perceptual dup — the actual
-        # crawl scenario); the inverted JPEG must not
-        (4, encode_jpeg_gray(bytes(base), w, h, quality=95)),
-        (5, encode_jpeg_gray(bytes(far), w, h, quality=95)),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    feats = build_media_features(media)
-    pairs = {
-        (r["media_a"], r["media_b"]): r["hamming"]
-        for r in image_neardup_pairs(feats, max_hamming=6).collect()
-    }
-
-    # brute force over the kernel's hashes
-    hashes = {
-        r["media_id"]: r["ahash"]
-        for r in feats.filter("ahash is not null").collect()
-    }
-    want = {}
-    ids = sorted(hashes)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            d = bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1")
-            if d <= 6:
-                want[(a, b)] = d
-    assert pairs == want
-    assert (0, 1) in pairs  # the perturbed copy is caught
-    assert (0, 2) not in pairs and (1, 2) not in pairs
-    assert all(3 not in p for p in pairs)  # undecodable never pairs
-    assert (0, 4) in pairs  # PNG original pairs with its JPEG copy
-    assert (2, 5) in pairs  # and the inverted pair match each other
-    assert (0, 5) not in pairs and (4, 5) not in pairs
-
-
 def test_gif_roundtrip_and_features():
     """r4 GIF codec: gray fixtures round-trip BIT-EXACTLY (the
     256-gray GCT's BT.601 luma is the index itself), interlace and

@@ -131,63 +131,6 @@ def test_ingest_job_commits_snapshots(spark, tmp_path):
     assert base + inc.count() == total == spark.read.parquet(ex).count()
 
 
-def test_dedup_job_since_snapshot(spark, tmp_path):
-    """--since-snapshot: the dedup job consumes exactly the files the
-    producer committed after the base snapshot — paired with --index,
-    this is incremental near-dup driven purely by table metadata."""
-    import types
-
-    from jobs.dedup import run
-
-    docs_t = str(tmp_path / "docs")
-    body = (
-        "the quick brown fox jumps over the lazy dog and keeps on "
-        "running through the deterministic corpus sentence number "
-    )
-    gen1 = spark.createDataFrame(
-        [(f"d{i:03d}", body + str(i % 10)) for i in range(40)],
-        "doc_id string, text string",
-    )
-    write_table(gen1, docs_t)
-    commit_snapshot(docs_t)  # v1
-
-    # full-corpus pass writes the band index
-    out1 = str(tmp_path / "full")
-    base = dict(
-        id_col="doc_id", text_col="text", method="minhash", bands=8,
-        rows_per_band=4, max_hamming=8, verify_jaccard=None,
-        master="local[4]", shuffle_partitions=4,
-    )
-    res1 = run(types.SimpleNamespace(
-        input=docs_t, output=out1, write_bands=True, **base))
-    assert res1["docs"] == 40
-
-    # producer appends a new batch (half dup-of-corpus, half fresh)
-    gen2 = spark.createDataFrame(
-        [(f"n{i:02d}", body + str(i % 10)) for i in range(10)]
-        + [(f"n{i:02d}", f"entirely fresh unseen content block {i} " * 8)
-           for i in range(10, 20)],
-        "doc_id string, text string",
-    )
-    write_table(gen2, docs_t, mode="append")
-    commit_snapshot(docs_t)  # v2
-
-    out2 = str(tmp_path / "incr")
-    res2 = run(types.SimpleNamespace(
-        input=docs_t, output=out2, index=f"{out1}/bands",
-        since_snapshot=1, update_index=False, **base))
-    # only the 20 appended docs were processed, not the 60-row table
-    assert res2["mode"] == "incremental" and res2["docs"] == 20
-    assert res2["dropped_vs_index"] >= 10  # corpus dups caught via index
-
-    # nothing new after v2 -> graceful no-op
-    res3 = run(types.SimpleNamespace(
-        input=docs_t, output=str(tmp_path / "noop"),
-        index=f"{out1}/bands", since_snapshot=2, update_index=False,
-        **base))
-    assert res3["docs"] == 0 and "no files added" in res3["note"]
-
-
 def test_snapshot_commits_before_mark_done(spark, tmp_path, monkeypatch):
     """review r3: mark_done-then-snapshot left a window where a crash
     permanently hid the batch's files from --since-snapshot consumers.

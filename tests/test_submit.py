@@ -73,47 +73,3 @@ def test_spark_submit_pyfiles_ingest(tmp_path):
         assert (out / sub).exists(), f"missing {sub}; stderr: {res.stderr[-2000:]}"
     # the job prints its metrics dict as the last stdout line
     assert "'docs':" in res.stdout, res.stdout[-500:]
-
-
-def test_spark_submit_pyfiles_dedup(tmp_path):
-    submit = _spark_submit()
-    if submit is None:
-        import pytest
-
-        pytest.skip("spark-submit not on this host")
-    zip_path = build(tmp_path / "engine.zip")
-    job = tmp_path / "dedup.py"
-    shutil.copy(REPO / "jobs" / "dedup.py", job)
-    out = tmp_path / "out"
-    env = dict(
-        os.environ,
-        PYSPARK_PYTHON=sys.executable,
-        PYSPARK_DRIVER_PYTHON=sys.executable,
-    )
-    res = subprocess.run(
-        [
-            submit,
-            "--master",
-            "local[4]",
-            "--py-files",
-            str(zip_path),
-            str(job),
-            "--input",
-            "/root/testdata/sf0.001/documents.parquet",
-            "--output",
-            str(out),
-            "--verify-jaccard",
-            "0.3",
-            "--shuffle-partitions",
-            "4",
-        ],
-        cwd=tmp_path,  # NOT the repo — imports must come from the zip
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=240,
-    )
-    assert res.returncode == 0, res.stderr[-3000:]
-    for sub in ("pairs", "clusters", "canonical"):
-        assert (out / sub).exists(), f"missing {sub}; stderr: {res.stderr[-2000:]}"
-    assert '"kept":' in res.stdout, res.stdout[-500:]

@@ -12,18 +12,15 @@ import pathlib
 REPO = pathlib.Path(__file__).resolve().parents[1]
 
 # the ingest system (batch, stream, compaction of its tables), the
-# training-corpus and link-graph jobs that remain, the query registry,
-# the benchmark, and the scripts the golden/oracle workflow and the
-# tests run
+# training-corpus jobs that remain, the query registry, the benchmark,
+# and the scripts the golden/oracle workflow and the tests run
 ENTRY_POINTS = (
     "jobs.ingest",
     "jobs.stream",
     "jobs.compact",
     "jobs.corpus",
     "jobs.curate",
-    "jobs.dedup",
     "jobs.report",
-    "jobs.linkgraph",
     "__spark_entry__",
     "ingestbench.run",
     "scripts.check_oracles",
