@@ -17,8 +17,7 @@ within each source tier):
     robots       <meta name=robots content=...> (first one)
     noindex      derived: 'noindex' or 'none' among the robots
                  directive tokens — the page's explicit opt-out from
-                 indexing, which a respectful corpus build honors
-                 (jobs/corpus.py --respect-noindex)
+                 indexing
 
 Values are whitespace-collapsed and length-capped (512 chars) — put
 APIs bound metadata size. Charset handling reuses the pinned decoder

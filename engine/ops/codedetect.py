@@ -17,7 +17,7 @@ Scale shape: ONE map-only pass, pure codegen — every feature is a
 regexp/filter/transform expression over the text column, no Python,
 no shuffle, text never moves (plan-asserted in
 tests/test_codedetect.py). At 10^12 docs this runs beside the other
-map-only screens (linefix, curate) at scan cost.
+map-only curate screens at scan cost.
 
 Features (each in [0, 1]):
 

@@ -120,10 +120,9 @@ def filter_urls(
             .filter(F.col("_sfx") != "")
             .distinct()
         )
-        # budget-gate the blocklist broadcast (r4, the robots/frontier
-        # discipline): public URL blocklists reach 10^7 domains —
-        # above the byte budget the semi join is left unhinted and
-        # AQE decides from actual sizes
+        # budget-gate the blocklist broadcast: public URL blocklists
+        # reach 10^7 domains — above the byte budget the semi join is
+        # left unhinted and AQE decides from actual sizes
         from engine.partitioning import fits_broadcast_budget
 
         if fits_broadcast_budget(

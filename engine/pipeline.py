@@ -25,7 +25,6 @@ from engine.udfs import (
     CHUNKS_DDL,
     chunk_map_in_pandas,
     embed_udf,
-    langid_udf,
     route_extract_udf,
 )
 
@@ -47,8 +46,6 @@ def build_extracted(
     pages: DataFrame,
     num_partitions: int | None = None,
     dedup: bool = True,
-    with_lang_guess: bool = False,
-    canonical_urls: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extracted table.
 
@@ -67,12 +64,6 @@ def build_extracted(
     which is far cheaper than shuffling every payload byte to
     co-locate urls before extracting.
 
-    canonical_urls=True rewrites url to its canonical form
-    (engine/ops/urlnorm.py: defrag, case, default ports, tracking
-    params) BEFORE the dedup key is formed, so capture variants of one
-    resource collapse to a single output row. Off by default: the
-    byte-identity contract is keyed on the raw url.
-
     num_partitions (both dedup modes): sets the partition count of the
     OUTPUT for downstream balance. With dedup=True it is applied as the
     shuffle-partition count of the dedup exchange itself (repartition on
@@ -80,10 +71,6 @@ def build_extracted(
     is still exactly ONE exchange); with dedup=False it is a plain
     repartition after extraction.
     """
-    if canonical_urls:
-        from engine.ops.urlnorm import canonical_url_col
-
-        pages = pages.withColumn("url", canonical_url_col("url"))
     df = pages.withColumn("_ex", route_extract_udf(F.col("html")))
     df = df.select(
         "url",
@@ -123,11 +110,7 @@ def build_extracted(
             df = df.repartition(num_partitions, "url")
     df = df.withColumn("n_chars", F.length("text").cast("long"))
     df = df.withColumn("content_sha256", F.sha2(F.col("text"), 256))
-    if with_lang_guess:
-        df = df.withColumn("lang_guess", langid_udf(F.col("text")))
-    return df.select(*EXTRACTED_COLS, *(
-        ["lang_guess"] if with_lang_guess else []
-    ))
+    return df.select(*EXTRACTED_COLS)
 
 
 def build_chunks(extracted: DataFrame) -> DataFrame:
@@ -177,22 +160,6 @@ def build_docmeta(pages: DataFrame) -> DataFrame:
         "_m.canonical",
         "_m.robots",
         "_m.noindex",
-    )
-
-
-def screen_noindex(pages: DataFrame) -> DataFrame:
-    """Drop pages whose meta-robots directive opts out of indexing
-    (noindex / none) — the respectful-corpus screen, applied BEFORE
-    extraction so opted-out content never enters any derived table.
-    Map-only: the docmeta parse is head-bounded, far cheaper than the
-    full extraction it saves. Pages without the directive (or without
-    parseable HTML) pass through untouched."""
-    from engine.udfs import docmeta_udf
-
-    return (
-        pages.withColumn("_noindex", docmeta_udf("html")["noindex"])
-        .filter(~F.coalesce("_noindex", F.lit(False)))
-        .drop("_noindex")
     )
 
 

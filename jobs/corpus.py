@@ -10,21 +10,10 @@ Stages, each writing its own parquet table under <output>/:
 
     extract    pages -> main-content docs (route+extract+dedup latest
                per url; engine/pipeline.build_extracted)
-    linefix    (opt-in, --fix-lines) line-wise corrections -> counters/
-               nav stubs/caps menus removed BEFORE near-dup
-               (engine/ops/linefix; RefinedWeb §3.1.3)
-    langsplit  (opt-in, --monolingual LANG) paragraph-language screen:
-               LANG-majority docs only, minority-language paragraphs
-               dropped (engine/ops/langsplit; CCNet §4.3). Extract-time
-               screens: --robots (RFC 9309), --respect-noindex,
-               --license-filter (ccREL permissive slice)
     neardup    MinHash+LSH pairs -> connected components -> canonical
                docs only (engine/ops/{dedup,graph})
     linedup    corpus-wide repeated-line removal rewrite
                (engine/ops/linedup)
-    substrdedup (opt-in, --substr-w) duplicated >=w-token verbatim-run
-               removal rewrite -> <output>/substr_cleaned
-               (engine/ops/substrdedup; Lee et al. 2022 ExactSubstr)
     curate     rule verdicts + optional LM perplexity screen —
                composes jobs/curate.run, so the audit layout
                (curate/kept, curate/rejected) and reason stats are
@@ -57,8 +46,8 @@ engine/checkpoint.py). `--resume` skips every stage whose manifest
 entry exists AND whose output _SUCCESS marker is present — a crash
 loses at most the stage in flight, and a finished run reruns as five
 no-ops. Stage outputs are plain parquet tables: any stage can also be
-re-driven by its standalone job (jobs/{dedup,curate}.py) against the
-same directories.
+re-driven by its standalone job (jobs/curate.py) against the same
+directories.
 
 Prints ONE JSON line: per-stage rows + wall seconds + the manifest.
 """
@@ -105,10 +94,10 @@ def _stage_done(
     params: dict | None = None,
 ) -> bool:
     """A committed stage only counts when its semantics-affecting
-    params match what the manifest recorded — re-running with e.g.
-    --respect-noindex after a run without it must redo the stage, not
-    silently skip the new screen. Entries committed before params
-    were recorded (no 'params' key) match only an empty params dict."""
+    params match what the manifest recorded — re-running with e.g. a
+    different --sample-fraction must redo the stage, not silently keep
+    the old sample. Entries committed before params were recorded (no
+    'params' key) match only an empty params dict."""
     if stage not in manifest["stages"]:
         return False
     if (manifest["stages"][stage].get("params") or {}) != (params or {}):
@@ -169,98 +158,17 @@ def run(args) -> dict:
         from engine.pipeline import build_extracted
 
         pages = spark.read.parquet(args.pages)
-        if args.robots:
-            # per-HOST opt-out first (RFC 9309): disallowed urls never
-            # enter any derived table; rules broadcast, pages map-only
-            from engine.ops.robots import screen_robots
-
-            robots = spark.read.parquet(args.robots)
-            pages = screen_robots(pages, robots, crawler=args.crawler)
-        if args.respect_noindex:
-            # pages whose meta-robots opts out of indexing never
-            # enter any derived table (map-only, head-bounded parse)
-            from engine.pipeline import screen_noindex
-
-            pages = screen_noindex(pages)
-        if args.license_filter:
-            # openly-licensed slice: keep only pages declaring a
-            # permissive CC license (map-only codegen regex; strict =
-            # explicit rel="license" declarations only)
-            from engine.ops.license import license_filter
-
-            pages = license_filter(
-                pages, require_rel=args.license_filter == "strict"
-            ).drop("license_code", "license_version", "license_rel")
         build_extracted(pages).write.mode("overwrite").parquet(path)
         return spark.read.parquet(path).count()
 
-    extract_params = {}
-    if args.respect_noindex:
-        extract_params["respect_noindex"] = True
-    if args.robots:
-        extract_params["robots"] = args.robots
-        extract_params["crawler"] = args.crawler
-    if args.license_filter:
-        extract_params["license_filter"] = args.license_filter
-    stage("extract", "extracted", do_extract, params=extract_params or None)
-    neardup_input = "extracted"
-
-    # -- optional: line-wise corrections (RefinedWeb §3.1.3) -----------
-    # BEFORE near-dup, so boilerplate lines neither pollute minhash
-    # signatures nor survive into any downstream table
-    if args.fix_lines:
-
-        def do_linefix(path: str) -> int:
-            from engine.ops.linefix import fix_lines
-
-            docs = spark.read.parquet(os.path.join(out, "extracted"))
-            fixed = fix_lines(docs, max_removed_frac=args.max_removed_frac)
-            (
-                fixed.filter(F.col("line_keep"))
-                .withColumn("text", F.col("text_fixed"))
-                .drop("text_fixed", "line_keep")
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            return spark.read.parquet(path).count()
-
-        stage(
-            "linefix",
-            "linefixed",
-            do_linefix,
-            params={"max_removed_frac": args.max_removed_frac},
-        )
-        neardup_input = "linefixed"
-
-    # -- optional: monolingual slice (CCNet paragraph language ID) -----
-    if args.monolingual:
-
-        def do_langsplit(path: str) -> int:
-            from engine.ops.langsplit import filter_language
-
-            docs = spark.read.parquet(os.path.join(out, neardup_input))
-            filter_language(
-                docs, args.monolingual, min_frac=args.lang_min_frac
-            ).write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "langsplit",
-            "monolingual",
-            do_langsplit,
-            params={
-                "lang": args.monolingual,
-                "min_frac": args.lang_min_frac,
-            },
-        )
-        neardup_input = "monolingual"
+    stage("extract", "extracted", do_extract)
 
     # -- near-dup dedup to canonical docs ------------------------------
     def do_neardup(path: str) -> int:
         from engine.ops.dedup import minhash_candidate_pairs
         from engine.ops.graph import dedup_clusters
 
-        docs = spark.read.parquet(os.path.join(out, neardup_input))
+        docs = spark.read.parquet(os.path.join(out, "extracted"))
         nonempty = docs.filter(
             F.length(F.coalesce(F.col("text"), F.lit(""))) > 0
         )
@@ -272,10 +180,7 @@ def run(args) -> dict:
         canonical.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path).count()
 
-    # input table is a semantics-affecting param: toggling --fix-lines /
-    # --monolingual on a resumed run changes what neardup reads, so the
-    # committed stage must not be trusted across that change
-    stage("neardup", "canonical", do_neardup, params={"input": neardup_input})
+    stage("neardup", "canonical", do_neardup)
 
     # -- corpus-wide line dedup rewrite --------------------------------
     def do_linedup(path: str) -> int:
@@ -286,25 +191,6 @@ def run(args) -> dict:
         return spark.read.parquet(path).count()
 
     stage("linedup", "cleaned", do_linedup)
-    curate_input = "cleaned"
-
-    # -- optional: exact-substring dedup rewrite (Lee et al. 2022) ------
-    if args.substr_w:
-
-        def do_substr(path: str) -> int:
-            from engine.ops.substrdedup import dedup_substrings
-
-            docs = spark.read.parquet(os.path.join(out, "cleaned"))
-            dedup_substrings(docs, w=args.substr_w, id_col="url").write.mode(
-                "overwrite"
-            ).parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "substrdedup", "substr_cleaned", do_substr,
-            params={"w": args.substr_w},
-        )
-        curate_input = "substr_cleaned"
 
     # -- curation (+ optional LM screen): the standalone job, composed -
     def do_curate(path: str) -> int:
@@ -314,7 +200,7 @@ def run(args) -> dict:
 
         res = curate_run(
             types.SimpleNamespace(
-                input=os.path.join(out, curate_input),
+                input=os.path.join(out, "cleaned"),
                 output=path,
                 id_col="url",
                 min_tokens=args.min_tokens,
@@ -338,7 +224,6 @@ def run(args) -> dict:
     # (It can't go through stage() verbatim because the curate job
     # writes <table>/kept/_SUCCESS, not <table>/_SUCCESS.)
     curate_params = {
-        "input": curate_input,
         "min_tokens": args.min_tokens,
         "check_lang": bool(args.check_lang),
         "url_filter": bool(args.url_filter or args.url_blocklist),
@@ -688,46 +573,7 @@ def _parser() -> argparse.ArgumentParser:
         action="store_true",
         help="skip stages already committed in corpus_manifest.json",
     )
-    p.add_argument(
-        "--robots",
-        default=None,
-        help="parquet of robots.txt bodies (host string, body string): "
-        "screen pages by RFC 9309 Allow/Disallow for --crawler before "
-        "extraction (engine/ops/robots)",
-    )
-    p.add_argument("--crawler", default="sparkbot")
-    p.add_argument(
-        "--license-filter",
-        choices=("strict", "loose"),
-        default=None,
-        help="keep only pages declaring a permissive CC license "
-        "(engine/ops/license): strict = rel='license' declarations "
-        "only; loose = any CC url marker",
-    )
-    p.add_argument(
-        "--respect-noindex",
-        action="store_true",
-        help="drop pages whose <meta name=robots> carries noindex/none "
-        "before extraction (engine/pipeline.screen_noindex)",
-    )
     p.add_argument("--min-tokens", type=int, default=20)
-    p.add_argument(
-        "--fix-lines",
-        action="store_true",
-        help="line-wise corrections before near-dup (RefinedWeb "
-        "§3.1.3: counters / nav stubs / caps menus / lone-word lines "
-        "removed; docs losing more than --max-removed-frac of their "
-        "words dropped)",
-    )
-    p.add_argument("--max-removed-frac", type=float, default=0.05)
-    p.add_argument(
-        "--monolingual",
-        default=None,
-        metavar="LANG",
-        help="keep only LANG-majority docs, rewritten to LANG-majority "
-        "paragraphs (engine/ops/langsplit; CCNet §4.3)",
-    )
-    p.add_argument("--lang-min-frac", type=float, default=0.5)
     p.add_argument(
         "--dsir-target",
         default=None,
@@ -752,14 +598,6 @@ def _parser() -> argparse.ArgumentParser:
         "--check-lang",
         action="store_true",
         help="enable the langid screen in curation (off by default)",
-    )
-    p.add_argument(
-        "--substr-w",
-        type=int,
-        default=0,
-        help="remove duplicated verbatim runs of at least this many "
-        "tokens corpus-wide (Lee et al. 2022 ExactSubstr; 0 = off, "
-        "published setting is 50)",
     )
     p.add_argument(
         "--url-filter",

@@ -275,8 +275,11 @@ def run(args) -> dict:
     fill_defaults(args, _parser())
     # flag combinations are checked BEFORE any work, so a bad one
     # fails with nothing written or put to the index
-    if args.prior_chunks and not args.delta_against:
-        raise SystemExit("--prior-chunks requires --delta-against")
+    if args.prior_chunks and not (args.delta_against and args.vector_index):
+        raise SystemExit(
+            "--prior-chunks requires --delta-against and --vector-index "
+            "(it only feeds the index's stale-key deletes)"
+        )
     if args.vector_index and args.delta_against and not args.prior_chunks:
         raise SystemExit(
             "--vector-index with --delta-against needs --prior-chunks "
@@ -455,7 +458,7 @@ def _parser() -> argparse.ArgumentParser:
         "--prior-chunks",
         default=None,
         help="prior chunks table matching --delta-against's extracted "
-        "table; source of the stale-key delete set",
+        "table; source of the --vector-index stale-key delete set",
     )
     p.add_argument(
         "--canonical-urls",

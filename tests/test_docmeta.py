@@ -183,27 +183,3 @@ def test_robots_noindex_detection():
     m = extract_docmeta(raw)
     assert m["noindex"] is True
 
-
-def test_screen_noindex_spark(spark):
-    from engine.pipeline import screen_noindex
-
-    rows = [
-        ("http://a.com/keep", _doc("<title>k</title>", "<p>body</p>")),
-        (
-            "http://a.com/optout",
-            _doc('<meta name="robots" content="noindex">', "<p>x</p>"),
-        ),
-        ("http://a.com/pdf", b"%PDF-1.4 not html"),  # unparseable: passes
-        ("http://a.com/null", None),
-    ]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    kept = {r["url"] for r in screen_noindex(pages).collect()}
-    assert kept == {"http://a.com/keep", "http://a.com/pdf", "http://a.com/null"}
-    # map-only: no Exchange in the screen
-    plan = (
-        screen_noindex(pages)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan

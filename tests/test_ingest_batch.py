@@ -103,10 +103,10 @@ def test_ingest_releases_every_cached_batch(spark, tmp_path):
 
 
 def test_bad_flag_combinations_fail_before_any_work(spark, tmp_path):
-    """--vector-index --delta-against without --prior-chunks, and
-    --prior-chunks without --delta-against, stop the job before its
-    first batch: nothing lands under --output and no request reaches
-    the vector index."""
+    """--vector-index --delta-against without --prior-chunks,
+    --prior-chunks without --delta-against, and --prior-chunks without
+    --vector-index stop the job before its first batch: nothing lands
+    under --output and no request reaches the vector index."""
     import jobs.ingest as ingest
 
     t1 = dt.datetime(2026, 3, 1, 12)
@@ -126,12 +126,16 @@ def test_bad_flag_combinations_fail_before_any_work(spark, tmp_path):
     bad = (
         {"delta_against": os.path.join(prior, "extracted")},
         {"prior_chunks": os.path.join(prior, "chunks")},
+        {
+            "delta_against": os.path.join(prior, "extracted"),
+            "prior_chunks": os.path.join(prior, "chunks"),
+            "vector_index": None,
+        },
     )
     for i, over in enumerate(bad):
         out, index = tmp_path / f"o{i}", tmp_path / f"index{i}"
+        kw = {"vector_index": str(index), **over}
         with pytest.raises(SystemExit):
-            ingest.run(
-                _ingest_args(str(out), input=in2, vector_index=str(index), **over)
-            )
+            ingest.run(_ingest_args(str(out), input=in2, **kw))
         assert not (out / "extracted").exists(), over
         assert not [f for _, _, fs in os.walk(index) for f in fs], over

@@ -119,9 +119,9 @@ def test_salted_join_result_invariant_and_spreads_hot_key(spark):
         .collect()
     )
     assert len(dist) == 8 and max(r["count"] for r in dist) < 400, dist
-    # salt_cols (round-3 review: jaccard_verify's second join salts on
-    # the slim pair key instead of re-hashing joined text payloads):
-    # result-invariant and still spread across the salt range
+    # salt_cols (salt on a slim key column instead of hashing every
+    # payload column): result-invariant and still spread across the
+    # salt range
     got2 = salted_join(big, small, on="k", salt_buckets=8, salt_cols=["v"])
     assert got2.exceptAll(exp).isEmpty() and exp.exceptAll(got2).isEmpty()
     dist2 = (

@@ -71,13 +71,14 @@ def test_map_only_plan(spark):
     assert "Exchange" not in plan(df.select(canonical_url_col("url")))
 
 
-def test_pipeline_canonical_urls_collapses_variants(spark):
-    """build_extracted(canonical_urls=True): capture variants of one
-    resource dedup to a single row keyed by the canonical url, and the
-    latest capture still wins."""
+def test_pipeline_canonical_urls_collapses_variants(spark, tmp_path):
+    """jobs.ingest --canonical-urls: capture variants of one resource
+    dedup to a single row keyed by the canonical url, and the latest
+    capture still wins; without the flag every raw url keeps its row."""
     import datetime as dt
 
-    from engine.pipeline import build_extracted
+    import jobs.ingest as ingest
+    from tests.test_delta import _ingest_args
 
     html_v1 = b"<html><body><p>" + b"old version text here. " * 30 + b"</p></body></html>"
     html_v2 = b"<html><body><p>" + b"new version text here. " * 30 + b"</p></body></html>"
@@ -91,13 +92,21 @@ def test_pipeline_canonical_urls_collapses_variants(spark):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    ex = build_extracted(pages, canonical_urls=True)
-    rows = {r["url"]: r for r in ex.collect()}
-    assert set(rows) == {"http://s.com/a", "http://s.com/b"}
-    assert "new version" in rows["http://s.com/a"]["text"]
+    inp = str(tmp_path / "pages")
+    pages.write.parquet(inp)
+
+    def ingested(name, **kw):
+        out = tmp_path / name
+        ingest.run(_ingest_args(str(out), input=inp, **kw))
+        rows = spark.read.parquet(str(out / "extracted")).collect()
+        return {r["url"]: r["text"] for r in rows}
+
+    canon = ingested("canon", canonical_urls=True)
+    assert set(canon) == {"http://s.com/a", "http://s.com/b"}
+    assert "new version" in canon["http://s.com/a"]
 
     # default (raw-url key) keeps all three
-    assert build_extracted(pages).count() == 3
+    assert len(ingested("raw")) == 3
 
 
 def test_canonicalization_is_idempotent(spark):
