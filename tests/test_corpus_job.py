@@ -464,19 +464,22 @@ def test_resume_skips_partitioned_split_stage(spark, tmp_path, pages_path):
 
 # -- kill-mid-stage chaos harness (VERDICT r3 next #7) ----------------
 
-# a 9-stage configuration: every non-data-dependent opt-in enabled
+# an 11-stage configuration: every opt-in stage enabled (dsir's target
+# is built by the chaos_kw fixture)
 CHAOS_KW = dict(
     min_tokens=5,
     sample_fraction=0.5,
+    dsir_fraction=0.8,
     max_host_share=0.5,
+    mix_alpha=0.5,
     splits="train=0.8,val=0.2",
     pack_budget=128,
     pack_shards=4,
     export_shard_mb=1,
 )
 CHAOS_STAGES = [
-    "extract", "neardup", "linedup", "curate", "sample", "rebalance",
-    "split", "pack", "export",
+    "extract", "neardup", "linedup", "curate", "dsir", "sample",
+    "rebalance", "tempmix", "split", "pack", "export",
 ]
 
 
@@ -500,19 +503,33 @@ def _artifact_bytes(out):
 
 
 @pytest.fixture(scope="module")
-def chaos_ref(spark, tmp_path_factory, pages_path):
+def chaos_kw(spark, tmp_path_factory, pages_path):
+    from engine.pipeline import build_extracted
+
+    # dsir target = a slice of the extracted pool (distribution sanity
+    # only), written once so every run sees the same target
+    tpath = str(tmp_path_factory.mktemp("chaostarget") / "target")
+    build_extracted(spark.read.parquet(pages_path)).limit(10).write.parquet(
+        tpath
+    )
+    return dict(CHAOS_KW, dsir_target=tpath)
+
+
+@pytest.fixture(scope="module")
+def chaos_ref(spark, tmp_path_factory, pages_path, chaos_kw):
     from jobs.corpus import run
 
     out = str(tmp_path_factory.mktemp("chaosref") / "corpus")
-    res = run(_args(pages_path, out, **CHAOS_KW))
-    # the config really exercises all 9 stages, in this order
+    res = run(_args(pages_path, out, **chaos_kw))
+    # the config really exercises all 11 stages, in this order
     assert list(res["stages"]) == CHAOS_STAGES
+    assert res["stages"]["export"]["rows"] > 0
     return out, res
 
 
 @pytest.mark.parametrize("kill_at", range(1, len(CHAOS_STAGES) + 1))
 def test_kill_mid_stage_resume_byte_equals_single_shot(
-    spark, tmp_path, pages_path, chaos_ref, monkeypatch, kill_at
+    spark, tmp_path, pages_path, chaos_kw, chaos_ref, monkeypatch, kill_at
 ):
     """Chaos harness: crash the job DURING stage k's manifest commit
     (output table + _SUCCESS already on disk, manifest entry missing —
@@ -534,10 +551,10 @@ def test_kill_mid_stage_resume_byte_equals_single_shot(
 
     monkeypatch.setattr(jc, "_commit_stage", chaotic)
     with pytest.raises(RuntimeError, match="chaos_kill"):
-        jc.run(_args(pages_path, out, **CHAOS_KW))
+        jc.run(_args(pages_path, out, **chaos_kw))
     monkeypatch.setattr(jc, "_commit_stage", real)
 
-    res = jc.run(_args(pages_path, out, resume=True, **CHAOS_KW))
+    res = jc.run(_args(pages_path, out, resume=True, **chaos_kw))
     assert {k: v["rows"] for k, v in res["stages"].items()} == {
         k: v["rows"] for k, v in ref_res["stages"].items()
     }
