@@ -3,9 +3,8 @@ NeurIPS 2023): pick the k raw-corpus docs whose hashed-n-gram feature
 distribution looks most like a small trusted target set, by importance
 weighting in feature space and Gumbel-top-k resampling. The published
 data-selection method for pretraining mixes (SURVEY §2 training-data
-extensions); complements the engine's CCNet pair — the LM-perplexity
-filter (engine/ops/lm.py) and the logreg quality classifier
-(engine/ops/classify.py) — with the distribution-MATCHING selector.
+extensions); complements the engine's CCNet-style LM-perplexity filter
+(engine/ops/lm.py) with a distribution-MATCHING selector.
 
 Spark-first shape:
 
@@ -17,8 +16,8 @@ Spark-first shape:
   * fitting is TWO model-sized aggs (explode bucket ids -> groupBy
     count, <= n_buckets rows each, map-side combinable); the model is
     one float per bucket (log p_target[b] - log p_raw[b]), Laplace-
-    smoothed — small enough to ride in a UDF closure (the kmeans /
-    classify discipline: driver work O(n_buckets), independent of N).
+    smoothed — small enough to ride in a UDF closure (driver work
+    O(n_buckets), independent of N).
   * scoring is ONE map-only Arrow pass: the log-ratio vector in the
     closure, each batch's log-weights = one np.add.reduceat over the
     concatenated bucket arrays. Zero shuffle, zero corpus movement

@@ -91,7 +91,6 @@ def salted_join(
     on: str,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
     how: str = "inner",
-    salt_cols: list[str] | None = None,
 ) -> DataFrame:
     """B8: salted equi-join for hot join keys (SURVEY.md §2 B8).
 
@@ -116,15 +115,9 @@ def salted_join(
     shuffles the same bytes it would anyway. Use for fact-to-fact
     joins where neither side broadcasts and the key histogram is
     skewed; for broadcastable dims prefer F.broadcast (B5).
-
-    salt_cols: columns of `big` to derive the salt from (default: all).
-    Pass a slim set when the big side carries wide payloads (e.g. a
-    pair key instead of an already-joined text column), so the payload
-    is not re-hashed per row; spreading is identical as long as the
-    chosen columns are unique-ish per row.
     """
     salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in (salt_cols or big.columns)]),
+        F.xxhash64(*[F.col(c) for c in big.columns]),
         F.lit(salt_buckets),
     ).alias("_salt")
     big_s = big.withColumn("_salt", salt)

@@ -45,7 +45,6 @@ EXTRACTED_COLS = [
 def build_extracted(
     pages: DataFrame,
     num_partitions: int | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extracted table.
 
@@ -64,12 +63,11 @@ def build_extracted(
     which is far cheaper than shuffling every payload byte to
     co-locate urls before extracting.
 
-    num_partitions (both dedup modes): sets the partition count of the
-    OUTPUT for downstream balance. With dedup=True it is applied as the
-    shuffle-partition count of the dedup exchange itself (repartition on
-    url before the agg — the groupBy reuses that partitioning, so there
-    is still exactly ONE exchange); with dedup=False it is a plain
-    repartition after extraction.
+    num_partitions: sets the partition count of the OUTPUT for
+    downstream balance. It is applied as the shuffle-partition count of
+    the dedup exchange itself (repartition on url before the agg — the
+    groupBy reuses that partitioning, so there is still exactly ONE
+    exchange).
     """
     df = pages.withColumn("_ex", route_extract_udf(F.col("html")))
     df = df.select(
@@ -83,31 +81,26 @@ def build_extracted(
         F.col("_ex.sent_spans").alias("sent_spans"),
         F.xxhash64(F.col("html")).alias("_tb"),
     )
-    if dedup:
-        payload = F.struct(
-            "warc_ts", "lang", "path", "text", "error", "n_sents", "sent_spans"
+    payload = F.struct(
+        "warc_ts", "lang", "path", "text", "error", "n_sents", "sent_spans"
+    )
+    if num_partitions:
+        # HashPartitioning(url, N) satisfies the agg's required
+        # distribution, so this pins the dedup exchange's width
+        # without adding a second exchange. Urls are ~unique in CC
+        # (re-crawl rate ~2%), so losing map-side partial
+        # reduction costs nothing.
+        df = df.repartition(num_partitions, "url")
+    df = (
+        df.groupBy("url")
+        .agg(
+            # ord is a TOTAL order over possible winners: ts, then
+            # payload hash, then lang (the only remaining free
+            # field) — max_by ties can never flip between runs
+            F.max_by(payload, F.struct("warc_ts", "_tb", "lang")).alias("_p")
         )
-        if num_partitions:
-            # HashPartitioning(url, N) satisfies the agg's required
-            # distribution, so this pins the dedup exchange's width
-            # without adding a second exchange. Urls are ~unique in CC
-            # (re-crawl rate ~2%), so losing map-side partial
-            # reduction costs nothing.
-            df = df.repartition(num_partitions, "url")
-        df = (
-            df.groupBy("url")
-            .agg(
-                # ord is a TOTAL order over possible winners: ts, then
-                # payload hash, then lang (the only remaining free
-                # field) — max_by ties can never flip between runs
-                F.max_by(payload, F.struct("warc_ts", "_tb", "lang")).alias("_p")
-            )
-            .select("url", "_p.*")
-        )
-    else:
-        df = df.drop("_tb")
-        if num_partitions:
-            df = df.repartition(num_partitions, "url")
+        .select("url", "_p.*")
+    )
     df = df.withColumn("n_chars", F.length("text").cast("long"))
     df = df.withColumn("content_sha256", F.sha2(F.col("text"), 256))
     return df.select(*EXTRACTED_COLS)

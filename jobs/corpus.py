@@ -45,9 +45,11 @@ is atomically rewritten (tmp + rename, same discipline as
 engine/checkpoint.py). `--resume` skips every stage whose manifest
 entry exists AND whose output _SUCCESS marker is present — a crash
 loses at most the stage in flight, and a finished run reruns as five
-no-ops. Stage outputs are plain parquet tables: any stage can also be
-re-driven by its standalone job (jobs/curate.py) against the same
-directories.
+no-ops. The manifest keeps only the stages (and their side entries)
+of the invocation that wrote it, so a resume that drops an opt-in
+stage also drops its entry. Stage outputs are plain parquet tables:
+any stage can also be re-driven by its standalone job
+(jobs/curate.py) against the same directories.
 
 Prints ONE JSON line: per-stage rows + wall seconds + the manifest.
 """
@@ -79,6 +81,10 @@ def _load_manifest(out_dir: str) -> dict:
 
 def _commit_stage(out_dir: str, manifest: dict, stage: str, info: dict) -> None:
     manifest["stages"][stage] = info
+    _write_manifest(out_dir, manifest)
+
+
+def _write_manifest(out_dir: str, manifest: dict) -> None:
     path = os.path.join(out_dir, MANIFEST)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -119,6 +125,7 @@ def run(args) -> dict:
     manifest = _load_manifest(out) if args.resume else {"stages": {}}
 
     dirty = False  # once any stage re-runs, every later stage must too
+    chain = []  # this invocation's stages, run or skipped
 
     def stage(name: str, table: str, action, params: dict | None = None) -> None:
         """Run one stage unless already committed WITH the same
@@ -128,6 +135,7 @@ def run(args) -> dict:
         output is those stages' input, so their committed tables are
         stale even though their own params match."""
         nonlocal dirty
+        chain.append(name)
         if (
             args.resume
             and not dirty
@@ -205,14 +213,11 @@ def run(args) -> dict:
                 id_col="url",
                 min_tokens=args.min_tokens,
                 no_check_lang=not args.check_lang,
-                url_filter=args.url_filter or bool(args.url_blocklist),
-                url_blocklist=args.url_blocklist,
                 lm_filter=args.lm_filter,
                 lm_pct=args.lm_pct,
                 gopher_repetition=args.gopher_repetition,
                 compression_min=args.compression_min,
                 compression_max=args.compression_max,
-                drop_code=args.drop_code,
                 master=args.master,
                 shuffle_partitions=args.shuffle_partitions,
             )
@@ -226,14 +231,11 @@ def run(args) -> dict:
     curate_params = {
         "min_tokens": args.min_tokens,
         "check_lang": bool(args.check_lang),
-        "url_filter": bool(args.url_filter or args.url_blocklist),
-        "url_blocklist": args.url_blocklist,
         "lm_filter": bool(args.lm_filter),
         "lm_pct": args.lm_pct,
         "gopher_repetition": bool(args.gopher_repetition),
         "compression_min": args.compression_min,
         "compression_max": args.compression_max,
-        "drop_code": bool(args.drop_code),
     }
 
     def curate_done() -> bool:
@@ -244,6 +246,7 @@ def run(args) -> dict:
             and os.path.exists(os.path.join(out, "curate", "kept", "_SUCCESS"))
         )
 
+    chain.append("curate")
     if not (args.resume and not dirty and curate_done()):
         dirty = True
         t0 = time.monotonic()
@@ -521,6 +524,7 @@ def run(args) -> dict:
     # idempotent — and a resumed run's card should reflect the tables
     # as they now stand)
     if args.report:
+        chain.append("report")
         import types
 
         from jobs.report import build_card, card_delta
@@ -555,6 +559,19 @@ def run(args) -> dict:
         manifest["card"] = {"table": docs_table,
                             "docs": card["totals"]["docs"],
                             "path": card_path}
+
+    # a resume that drops an opt-in stage keeps only this chain's
+    # entries, so the manifest names the tables the outputs came from
+    manifest["stages"] = {
+        k: v for k, v in manifest["stages"].items() if k in chain
+    }
+    for k, owner in (
+        ("packing", "pack"), ("bpe", "pack"), ("export", "export"),
+        ("card", "report"),
+    ):
+        if owner not in chain:
+            manifest.pop(k, None)
+    _write_manifest(out, manifest)
 
     result = {"output": out, "stages": manifest["stages"]}
     for k in ("packing", "bpe", "export", "card"):
@@ -599,18 +616,6 @@ def _parser() -> argparse.ArgumentParser:
         action="store_true",
         help="enable the langid screen in curation (off by default)",
     )
-    p.add_argument(
-        "--url-filter",
-        action="store_true",
-        help="enable the RefinedWeb-style URL screen in curation "
-        "(keyword scoring; add --url-blocklist for the domain list)",
-    )
-    p.add_argument(
-        "--url-blocklist",
-        default=None,
-        help="blocked-domain list (.txt one domain per line, or "
-        "parquet with a 'domain' column); implies --url-filter",
-    )
     p.add_argument("--lm-filter", action="store_true")
     p.add_argument("--lm-pct", type=float, default=90.0)
     p.add_argument(
@@ -630,12 +635,6 @@ def _parser() -> argparse.ArgumentParser:
         action="store_true",
         help="curate-stage Gopher repetition panel (top-2/3/4-gram and "
         "dup-5..10-gram character fractions at the published cuts)",
-    )
-    p.add_argument(
-        "--drop-code",
-        action="store_true",
-        help="curate-stage code/markup screen (engine/ops/codedetect; "
-        "reason 'code') — route source code out of the prose corpus",
     )
     p.add_argument("--sample-fraction", type=float, default=1.0)
     p.add_argument(

@@ -16,20 +16,6 @@ slice's scores are rejected with reason "lm_ppl". Training is one
 count groupBy; scoring broadcasts the pruned model, so the extra cost
 is two more map-shaped passes over the input — no corpus shuffle.
 
-`--url-filter` prepends a RefinedWeb-style URL screen
-(engine/ops/urlfilter): pinned keyword scoring over the url plus an
-optional domain blocklist (`--url-blocklist`, subdomain-suffix
-matched) — rejected with reasons "url_domain" / "url_score" before
-any content rule runs, and the LM/classifier below then train only
-on url-clean docs.
-
-`--classifier-ref <parquet>` trains the CCNet-style quality
-classifier (engine/ops/classify.py) with the given TRUSTED docs as
-the positive class and this corpus as the negative, then attaches
-`quality_score` (a pure codegen projection — the verdict rows already
-carry the metric feature columns); `--classifier-min-score` turns the
-score into a screen (reason "clf_score").
-
 Writes:
 
     <output>/kept        documents passing every rule
@@ -95,21 +81,6 @@ def run(args) -> dict:
 
         docs = with_repetition_panel(docs, text_col=args.text_col)
         rules.update(gopher_repetition_rules())
-    if args.badwords:
-        # C4-style banned-word screen; the list file is the caller's
-        # policy artifact (one term per line, # comments)
-        from engine.ops.wordfilter import screen_banned_words
-
-        with open(args.badwords, encoding="utf-8") as f:
-            terms = [
-                ln.strip()
-                for ln in f
-                if ln.strip() and not ln.lstrip().startswith("#")
-            ]
-        docs = screen_banned_words(
-            docs, terms, text_col=args.text_col, max_hits=args.badwords_max
-        ).drop("word_keep")  # the rule engine owns the verdict
-        rules["banned_hits"] = (0, args.badwords_max)
     if args.compression_min is not None or args.compression_max is not None:
         # zlib gibberish/template screen: attach the metric BEFORE
         # curate so the rule engine sees it like any other column
@@ -126,78 +97,6 @@ def run(args) -> dict:
         rules=rules,
         check_lang=not args.no_check_lang,
     )
-
-    if args.tag_code or args.drop_code:
-        # code/markup/data tag BEFORE prose screens: quality rules and
-        # the LM are calibrated on prose and misjudge code, so a code
-        # doc is either routed out (reason "code") or at least carries
-        # the tag for downstream mix stratification (map-only pass)
-        from engine.ops.codedetect import DEFAULT_THRESHOLD, detect_code
-
-        verdicts = detect_code(
-            verdicts,
-            text_col=args.text_col,
-            threshold=(
-                DEFAULT_THRESHOLD
-                if args.code_threshold is None
-                else args.code_threshold
-            ),
-        )
-        if args.drop_code:
-            verdicts = verdicts.withColumn(
-                "reasons",
-                F.when(
-                    F.col("is_code"),
-                    F.array_union("reasons", F.array(F.lit("code"))),
-                ).otherwise(F.col("reasons")),
-            ).withColumn("keep", F.col("keep") & ~F.col("is_code"))
-
-    if args.url_filter:
-        # URL screen FIRST (RefinedWeb order: a URL verdict costs
-        # bytes of the url column; content screens cost the document)
-        # — and the LM below then trains only on url-clean docs.
-        from engine.ops.urlfilter import filter_urls
-
-        bl = None
-        if args.url_blocklist:
-            if args.url_blocklist.endswith(".txt"):
-                # UT1-style lists carry blank lines and comments; a
-                # blank line must not become domain '' (it would match
-                # every host-less url — review r3)
-                bl = (
-                    spark.read.text(args.url_blocklist)
-                    .select(F.trim("value").alias("domain"))
-                    .filter(
-                        (F.col("domain") != "")
-                        & ~F.col("domain").startswith("#")
-                    )
-                )
-            else:
-                bl = spark.read.parquet(args.url_blocklist)
-        verdicts = filter_urls(
-            verdicts,
-            bl,
-            url_col=args.url_col,
-            threshold=args.url_threshold,
-        )
-        verdicts = (
-            verdicts.withColumn(
-                "reasons",
-                F.when(
-                    F.col("blocked_domain"),
-                    F.array_union("reasons", F.array(F.lit("url_domain"))),
-                ).otherwise(F.col("reasons")),
-            )
-            .withColumn(
-                "reasons",
-                F.when(
-                    ~F.col("blocked_domain") & ~F.col("url_keep"),
-                    F.array_union("reasons", F.array(F.lit("url_score"))),
-                ).otherwise(F.col("reasons")),
-            )
-            .withColumn("keep", F.col("keep") & F.col("url_keep"))
-            .drop("url_keep")  # blocked_domain + url_score stay (audit)
-        )
 
     lm_cut = None
     pinned = []  # persist handles to release after the writes
@@ -242,75 +141,6 @@ def run(args) -> dict:
                 ),
             ).withColumn("keep", F.col("keep") & lm_keep)
 
-    clf_stats = {}
-    if args.classifier_ref:
-        from engine.ops.classify import quality_classifier, score_logreg
-
-        # CCNet §4.4 proper: the reference is an EXTERNAL trusted set
-        # (a wiki dump, a hand-kept sample) — the model learns what
-        # "looks like the reference" from the raw metric columns, so
-        # its score is independent signal on top of the rule verdicts.
-        ref = spark.read.parquet(args.classifier_ref)
-        # CCNet trains on a SAMPLE: full-batch GD makes max_iter passes
-        # over its training frame, so the negative class is a
-        # deterministic hash-sample of the corpus sized at
-        # --classifier-neg-ratio x the reference (the model needs
-        # reference-vs-corpus contrast, not the whole corpus), keeping
-        # the 100-iteration loop over a bounded frame instead of 100
-        # corpus scans (review r3)
-        from engine.ops.sample import hash_sample
-
-        # negatives come from the URL-CLEAN slice when the url screen
-        # ran (the docstring's contract; spam-url docs would otherwise
-        # leak into the negative class — review r3). url_keep is
-        # already folded into `keep`, so re-derive it from the audit
-        # columns the screen left behind.
-        neg_pool = docs
-        if args.url_filter:
-            neg_pool = verdicts.filter(
-                ~F.col("blocked_domain")
-                & (F.col("url_score") < float(args.url_threshold))
-            )
-        n_ref = ref.count()
-        n_docs_total = neg_pool.count()
-        neg_frac = min(
-            1.0, args.classifier_neg_ratio * n_ref / max(1, n_docs_total)
-        )
-        neg = hash_sample(
-            neg_pool, neg_frac, id_col=args.id_col, salt="clf_neg"
-        )
-        if args.classifier_hashed:
-            # fastText-style hashed-ngram model (token IDENTITY, the
-            # DCLM/LLaMA filter shape) instead of metric features
-            from engine.ops.classify import fasttext_quality, score_hashed
-
-            model = fasttext_quality(
-                neg.select(args.text_col),
-                ref.select(args.text_col),
-                text_col=args.text_col,
-                stats=clf_stats,
-            )
-            verdicts = score_hashed(verdicts, model, text_col=args.text_col)
-        else:
-            model = quality_classifier(
-                neg.select(args.id_col, args.text_col),
-                ref.select(args.id_col, args.text_col),
-                id_col=args.id_col,
-                text_col=args.text_col,
-                stats=clf_stats,
-            )
-            # verdict rows already carry the metric feature columns, so
-            # scoring is a free codegen projection — no recompute, no join
-            verdicts = score_logreg(verdicts, model)
-        if args.classifier_min_score is not None:
-            clf_ok = F.col("quality_score") >= float(args.classifier_min_score)
-            verdicts = verdicts.withColumn(
-                "reasons",
-                F.when(clf_ok, F.col("reasons")).otherwise(
-                    F.array_union("reasons", F.array(F.lit("clf_score")))
-                ),
-            ).withColumn("keep", F.col("keep") & clf_ok)
-
     # the kept and rejected writes are two actions over one plan whose
     # most expensive stage is the langid Arrow UDF: persist so the
     # verdicts compute ONCE, and derive every count from the written
@@ -348,11 +178,6 @@ def run(args) -> dict:
         result["lm_cut_logppl"] = (
             round(lm_cut, 4) if lm_cut is not None else None
         )
-    if args.classifier_ref:
-        result["classifier"] = {
-            "iters": clf_stats.get("iters"),
-            "loss": round(clf_stats["loss"], 6) if "loss" in clf_stats else None,
-        }
     print(json.dumps(result))
     return result
 
@@ -393,36 +218,6 @@ def _parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--lm-min-count", type=int, default=2)
     p.add_argument(
-        "--classifier-ref",
-        default=None,
-        help="parquet of TRUSTED reference docs: train the CCNet-style "
-        "quality classifier (engine/ops/classify.py) reference-vs-"
-        "corpus and attach quality_score to every verdict row",
-    )
-    p.add_argument(
-        "--classifier-min-score",
-        type=float,
-        default=None,
-        help="with --classifier-ref: additionally reject docs scoring "
-        "below this (reason clf_score); omit to attach the score "
-        "without screening",
-    )
-    p.add_argument(
-        "--classifier-hashed",
-        action="store_true",
-        help="with --classifier-ref: train the fastText-style hashed "
-        "bag-of-ngrams model (token identity; the DCLM/LLaMA quality-"
-        "filter shape) instead of the metric-feature CCNet model",
-    )
-    p.add_argument(
-        "--classifier-neg-ratio",
-        type=float,
-        default=4.0,
-        help="negative (corpus) training sample size as a multiple of "
-        "the reference count — training runs over this bounded "
-        "sample, never the full corpus",
-    )
-    p.add_argument(
         "--top-bigram-max",
         type=float,
         default=None,
@@ -439,18 +234,6 @@ def _parser() -> argparse.ArgumentParser:
         "Table A1)",
     )
     p.add_argument(
-        "--badwords",
-        default=None,
-        help="banned-term list file (one word/phrase per line, # "
-        "comments) — C4-style content screen, reason banned_hits",
-    )
-    p.add_argument(
-        "--badwords-max",
-        type=int,
-        default=0,
-        help="docs stay kept while banned_hits <= this (C4 used 0)",
-    )
-    p.add_argument(
         "--compression-min",
         type=float,
         default=None,
@@ -465,43 +248,6 @@ def _parser() -> argparse.ArgumentParser:
         help="reject docs whose zlib compression ratio is above this "
         "(random/encoded junk barely compresses)",
     )
-    p.add_argument(
-        "--tag-code",
-        action="store_true",
-        help="attach code_score/is_code (engine/ops/codedetect) to "
-        "every verdict row without screening — downstream mix "
-        "stratification routes on the tag",
-    )
-    p.add_argument(
-        "--drop-code",
-        action="store_true",
-        help="reject docs detected as source code / markup / data "
-        "(reason 'code'): the prose quality rules and LM misjudge "
-        "code, so route it to a separate pipeline instead",
-    )
-    p.add_argument(
-        "--code-threshold",
-        type=float,
-        default=None,
-        help="code_score cut for is_code (default engine/ops/"
-        "codedetect.DEFAULT_THRESHOLD)",
-    )
-    p.add_argument(
-        "--url-filter",
-        action="store_true",
-        help="RefinedWeb-style URL screen (engine/ops/urlfilter): "
-        "keyword score + optional domain blocklist, applied before "
-        "the content rules (reasons url_domain / url_score)",
-    )
-    p.add_argument(
-        "--url-blocklist",
-        default=None,
-        help="blocked-domain list: parquet with a 'domain' column, or "
-        "a .txt file one domain per line (UT1 layout); subdomains of "
-        "a listed domain are blocked too",
-    )
-    p.add_argument("--url-threshold", type=float, default=1.0)
-    p.add_argument("--url-col", default="url")
     p.add_argument("--master", default="local[*]")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     return p

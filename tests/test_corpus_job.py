@@ -309,7 +309,8 @@ def test_resume_gates_on_stage_input_table(spark, tmp_path, pages_path):
     """Toggling --dsir-target on a resumed run changes what sample
     READS (dsir_selected vs curate/kept); the input table is recorded in
     the stage params, so sample redoes while everything upstream of it
-    skips."""
+    skips. The dropped stage's entry leaves the result and the
+    manifest."""
     from jobs.corpus import run
 
     out = str(tmp_path / "corpus_input_gate")
@@ -317,7 +318,10 @@ def test_resume_gates_on_stage_input_table(spark, tmp_path, pages_path):
     kept = spark.read.parquet(f"{out}/curate/kept")
     tpath = str(tmp_path / "target")
     kept.limit(10).write.parquet(tpath)
-    run(_args(pages_path, out, min_tokens=5, resume=True, dsir_target=tpath))
+    res = run(
+        _args(pages_path, out, min_tokens=5, resume=True, dsir_target=tpath)
+    )
+    assert "dsir" in res["stages"]
     before = _stage_mtimes(out)
 
     # drop --dsir-target: sample's own params are unchanged, but its
@@ -328,13 +332,15 @@ def test_resume_gates_on_stage_input_table(spark, tmp_path, pages_path):
         assert after[t] == before[t], t
     assert after["final"] > before["final"]
     assert res["stages"]["sample"]["rows"] == res["stages"]["curate"]["rows"]
+    assert "dsir" not in res["stages"]
+    with open(f"{out}/corpus_manifest.json") as f:
+        assert "dsir" not in json.load(f)["stages"]
 
 
 def test_curate_stage_compression_and_code_knobs(spark, tmp_path, pages_path):
-    """--compression-min/--compression-max and --drop-code flow through
-    the corpus job's curate stage, and changing them gates resume (the
-    curate stage re-runs; semantics-affecting params are in the
-    manifest)."""
+    """--compression-min/--compression-max flow through the corpus
+    job's curate stage, and changing them gates resume (the curate
+    stage re-runs; semantics-affecting params are in the manifest)."""
     from jobs.corpus import run
 
     out = str(tmp_path / "corpus")
@@ -346,18 +352,15 @@ def test_curate_stage_compression_and_code_knobs(spark, tmp_path, pages_path):
             sample_fraction=1.0,
             compression_min=0.05,
             compression_max=0.98,
-            drop_code=True,
         )
     )
     kept = spark.read.parquet(f"{out}/curate/kept")
     assert "compression_ratio" in kept.columns
-    assert "is_code" in kept.columns
     assert kept.filter("compression_ratio < 0.05").count() == 0
-    assert kept.filter("is_code").count() == 0
 
     with open(f"{out}/corpus_manifest.json") as f:
         params = json.load(f)["stages"]["curate"]["params"]
-    assert params["compression_min"] == 0.05 and params["drop_code"] is True
+    assert params["compression_min"] == 0.05
 
     # tightening the band must invalidate the curate stage on resume
     before = os.path.getmtime(os.path.join(out, "curate", "kept", "_SUCCESS"))
@@ -369,7 +372,6 @@ def test_curate_stage_compression_and_code_knobs(spark, tmp_path, pages_path):
             sample_fraction=1.0,
             compression_min=0.20,
             compression_max=0.98,
-            drop_code=True,
             resume=True,
         )
     )

@@ -207,51 +207,6 @@ def test_redact_pii_is_map_only(spark):
     assert "Exchange" not in p, p
 
 
-def test_curate_job_with_classifier_ref(spark, tmp_path):
-    """--classifier-ref: the job trains the CCNet reference-vs-corpus
-    classifier, attaches quality_score to every verdict row, and with
-    --classifier-min-score rejects low scorers with reason clf_score."""
-    import types
-
-    import jobs.curate as cj
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet"
-    ).select("doc_id", "text")
-    in_path = str(tmp_path / "docs")
-    docs.write.parquet(in_path)
-    # trusted reference: the longest third of the corpus (an external
-    # "looks good" slice stand-in)
-    ref_path = str(tmp_path / "ref")
-    docs.filter(F.length("text") > 400).write.parquet(ref_path)
-
-    out = str(tmp_path / "out")
-    res = cj.run(
-        types.SimpleNamespace(
-            input=in_path,
-            output=out,
-            no_check_lang=True,
-            classifier_ref=ref_path,
-            classifier_min_score=0.5,
-            master="local[4]",
-            shuffle_partitions=4,
-        )
-    )
-    assert res["classifier"]["iters"] >= 1
-    kept = spark.read.parquet(f"{out}/kept")
-    rej = spark.read.parquet(f"{out}/rejected")
-    assert "quality_score" in kept.columns
-    assert res["reasons"].get("clf_score", 0) > 0
-    # every kept row clears the cut; every clf_score rejection is below
-    assert kept.filter("quality_score < 0.5").count() == 0
-    assert (
-        rej.filter(F.array_contains("reasons", "clf_score"))
-        .filter("quality_score >= 0.5")
-        .count()
-        == 0
-    )
-
-
 def test_compression_ratio_metric_and_rule(spark):
     """zlib compression screen: templated repetition compresses far
     below prose, random hex barely compresses; wired as a plain rule
@@ -454,41 +409,6 @@ def test_curate_job_gopher_repetition_flag(spark, tmp_path):
     for c in ("top_2gram_frac", "dup_5gram_frac", "dup_10gram_frac"):
         assert c in kept.columns
     assert res["kept"] > 0
-
-
-def test_curate_job_with_hashed_classifier(spark, tmp_path):
-    """--classifier-hashed: same job pairing, but the fastText-style
-    hashed-ngram model scores on token identity; the score column
-    attaches and the screen fires."""
-    import types
-
-    import jobs.curate as cj
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet"
-    ).select("doc_id", "text")
-    in_path = str(tmp_path / "docs_h")
-    docs.write.parquet(in_path)
-    ref_path = str(tmp_path / "ref_h")
-    docs.filter(F.length("text") > 400).write.parquet(ref_path)
-
-    out = str(tmp_path / "out_h")
-    res = cj.run(
-        types.SimpleNamespace(
-            input=in_path,
-            output=out,
-            no_check_lang=True,
-            classifier_ref=ref_path,
-            classifier_hashed=True,
-            classifier_min_score=0.5,
-            master="local[4]",
-            shuffle_partitions=4,
-        )
-    )
-    assert res["classifier"]["iters"] >= 1
-    kept = spark.read.parquet(f"{out}/kept")
-    assert "quality_score" in kept.columns
-    assert kept.filter("quality_score < 0.5").count() == 0
 
 
 def test_ip_pii_screen_and_redaction(spark):

@@ -119,18 +119,6 @@ def test_salted_join_result_invariant_and_spreads_hot_key(spark):
         .collect()
     )
     assert len(dist) == 8 and max(r["count"] for r in dist) < 400, dist
-    # salt_cols (salt on a slim key column instead of hashing every
-    # payload column): result-invariant and still spread across the
-    # salt range
-    got2 = salted_join(big, small, on="k", salt_buckets=8, salt_cols=["v"])
-    assert got2.exceptAll(exp).isEmpty() and exp.exceptAll(got2).isEmpty()
-    dist2 = (
-        big.filter(F.col("k") == 7)
-        .groupBy(F.pmod(F.xxhash64("v"), F.lit(8)).alias("s"))
-        .count()
-        .collect()
-    )
-    assert len(dist2) == 8 and max(r["count"] for r in dist2) < 400, dist2
 
 
 def test_ivf_assignment_is_map_only(spark):
@@ -293,7 +281,7 @@ def test_chunk_over_unmaterialized_extract_single_arrow(spark, pages_path):
     from engine.pipeline import build_chunks, build_extracted
 
     pages = spark.read.parquet(pages_path)
-    p = plan(build_chunks(build_extracted(pages, dedup=False)))
+    p = plan(build_chunks(build_extracted(pages)))
     # formatted mode lists every node twice (tree + detail section)
     assert p.count("ArrowEvalPython") == 2, p
     assert "Filter" not in p, p

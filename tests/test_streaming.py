@@ -147,7 +147,7 @@ def test_vector_stream_end_to_end_matches_batch(spark, tmp_path):
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    vec = build_vectors(build_chunks(build_extracted(first, dedup=False)))
+    vec = build_vectors(build_chunks(build_extracted(first)))
     exp = {
         f"{r['url']}#{r['chunk_ix']}": [float(x) for x in r["embedding"]]
         for r in vec.collect()
