@@ -1,6 +1,6 @@
 """Trainable BPE tokenizer: corpus-sampled training, distributed apply.
 
-The packing/mix stages size training examples in tokens; a regex
+The packing stage sizes training examples in tokens; a regex
 token count (q27/q33) approximates what a real subword tokenizer
 would produce. This op closes that gap with byte-pair encoding
 (Sennrich et al. 2016): merges trained on THIS corpus, applied as a
@@ -99,7 +99,6 @@ def train_bpe(
     text_col: str = "text",
     id_col: str = "doc_id",
     sample_docs: int = 2000,
-    salt: str = "bpe-train",
 ) -> list[tuple[str, str]]:
     """Train merge rules on a deterministic hash-sample of the corpus.
 
@@ -119,7 +118,7 @@ def train_bpe(
         docs.withColumn(id_col, F.col(id_col).cast("string")),
         frac,
         id_col=id_col,
-        salt=salt,
+        salt="bpe-train",
     )
 
     @F.pandas_udf("array<string>")

@@ -48,7 +48,7 @@ def whitespace_token_count(col) -> "F.Column":
     return F.size(F.split(col, " ")).cast("long")
 
 
-def _pack_shard_fn(budget: int, split_col: str | None = None):
+def _pack_shard_fn(budget: int):
     import pandas as pd
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -76,7 +76,7 @@ def _pack_shard_fn(budget: int, split_col: str | None = None):
             over_col.append(False)
             seq_ix += 1
             used += nt
-        out = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "shard": shard,
                 "example_ix": pd.array(ex_col, dtype="int64"),
@@ -87,11 +87,6 @@ def _pack_shard_fn(budget: int, split_col: str | None = None):
                 "oversize": pd.array(over_col, dtype="boolean"),
             }
         )
-        if split_col is not None:
-            out.insert(
-                0, split_col, pdf[split_col].iloc[0] if len(pdf) else None
-            )
-        return out
 
     return pack
 
@@ -104,7 +99,6 @@ def pack_sequences(
     chunk_ix_col: str = "chunk_ix",
     token_col: str | None = None,
     text_col: str = "chunk_text",
-    split_col: str | None = None,
 ) -> DataFrame:
     """Assign every chunk to a (shard, example_ix, seq_ix) training
     slot under `budget` tokens per example. Returns PACK_DDL rows —
@@ -112,13 +106,7 @@ def pack_sequences(
 
     If `token_col` is None the count is computed from `text_col` with
     whitespace_token_count (projected BEFORE the shuffle, so only the
-    count crosses the exchange, never the text).
-
-    `split_col` (e.g. the label from engine/ops/mix.assign_splits)
-    joins the packing group key, so an example can NEVER mix chunks
-    from different splits — examples are identified by
-    (split, shard, example_ix) and the label rides along in the
-    output."""
+    count crosses the exchange, never the text)."""
     if budget <= 0:
         raise ValueError(f"budget {budget} must be positive")
     if n_shards <= 0:
@@ -136,25 +124,15 @@ def pack_sequences(
         .cast("int")
         .alias("shard"),
     ]
-    keys = ["shard"]
-    ddl = PACK_DDL
-    if split_col is not None:
-        cols.append(F.col(split_col).cast("string").alias(split_col))
-        keys = [split_col, "shard"]
-        ddl = f"{split_col} string, " + PACK_DDL
     meta = chunks.select(*cols)
-    return meta.groupBy(*keys).applyInPandas(
-        _pack_shard_fn(budget, split_col), ddl
-    )
+    return meta.groupBy("shard").applyInPandas(_pack_shard_fn(budget), PACK_DDL)
 
 
 def packing_stats(assignments: DataFrame, budget: int) -> DataFrame:
     """One-row packing efficiency summary: examples, chunks, fill rate
     (sum tokens over non-oversize examples / examples*budget), and the
     oversize count. Single agg over the (already small) metadata."""
-    base = {"shard", "example_ix", "seq_ix", "doc_key", "chunk_ix", "n_tokens", "oversize"}
-    extra = [c for c in assignments.columns if c not in base]  # e.g. split
-    per_ex = assignments.groupBy(*extra, "shard", "example_ix").agg(
+    per_ex = assignments.groupBy("shard", "example_ix").agg(
         F.sum("n_tokens").alias("ex_tokens"),
         F.count(F.lit(1)).alias("ex_chunks"),
         F.max(F.col("oversize").cast("int")).alias("is_oversize"),
@@ -188,15 +166,14 @@ def assemble_examples(
     chunk_ix_col: str = "chunk_ix",
     text_col: str = "chunk_text",
     sep: str = "\n",
-    split_col: str | None = "split",
 ) -> DataFrame:
     """Materialize packed training examples: join the metadata-only
     pack_sequences output back onto the chunk text and concatenate
     each example's chunks in seq_ix order.
 
-    Output: (example_id string, [split,] shard, example_ix, n_seqs,
-    n_tokens, oversize, text). example_id is a stable key
-    ([split/]shard/example_ix) suitable for export sharding
+    Output: (example_id string, shard, example_ix, n_seqs, n_tokens,
+    oversize, text). example_id is a stable key (shard/example_ix)
+    suitable for export sharding
     (engine/io/export.export_jsonl).
 
     Scale shapes: ONE equi-join on (doc_key, chunk_ix) brings text to
@@ -204,19 +181,7 @@ def assemble_examples(
     exchange exactly once), then ONE groupBy per example with the
     order-by folded into JVM expressions — collect_list of
     (seq_ix, text) structs, array_sort (sorts on the leading int
-    field), transform + concat_ws. No window, no Python.
-
-    split_col must name the SAME column pack_sequences partitioned
-    on (example_ix restarts per (split, shard) group): grouping
-    without it would concatenate same-(shard, example_ix) examples
-    from different splits into one row — cross-split text mixing
-    (review r3). The default matches assign_splits' label; it is
-    skipped when absent for unsplit corpora."""
-    split_cols = (
-        [split_col]
-        if split_col is not None and split_col in assignments.columns
-        else []
-    )
+    field), transform + concat_ws. No window, no Python."""
     asg = assignments.withColumnRenamed("doc_key", "_dk")
     txt = chunks.select(
         F.col(doc_col).cast("string").alias("_dk"),
@@ -224,7 +189,7 @@ def assemble_examples(
         F.col(text_col).alias("_txt"),
     )
     joined = asg.join(txt, ["_dk", "chunk_ix"])
-    per_ex = joined.groupBy(*split_cols, "shard", "example_ix").agg(
+    per_ex = joined.groupBy("shard", "example_ix").agg(
         F.count(F.lit(1)).alias("n_seqs"),
         F.sum("n_tokens").alias("n_tokens"),
         F.max(F.col("oversize").cast("int")).cast("boolean").alias("oversize"),
@@ -238,13 +203,10 @@ def assemble_examples(
             ),
         ).alias("text"),
     )
-    id_parts = [F.col(c) for c in split_cols] + [
-        F.col("shard").cast("string"),
-        F.col("example_ix").cast("string"),
-    ]
     return per_ex.select(
-        F.concat_ws("/", *id_parts).alias("example_id"),
-        *split_cols,
+        F.concat_ws(
+            "/", F.col("shard").cast("string"), F.col("example_ix").cast("string")
+        ).alias("example_id"),
         "shard",
         "example_ix",
         "n_seqs",

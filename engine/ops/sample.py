@@ -1,20 +1,15 @@
-"""Deterministic corpus sampling / mixing (training-data ops).
+"""Deterministic corpus sampling (training-data ops).
 
-Two primitives a training-mix pipeline needs at 100 TB:
+  hash_sample  keep a row iff pmod(xxhash64(id, salt), D) < p*D — a
+               pure function of the row id, so the sample is
+               reproducible across runs, engines, partitionings and
+               cluster sizes (no RNG state, no seed plumbing through
+               executors). Same-salt fractions NEST (the 10% sample is
+               a subset of the 30% one — composing takes the min, not
+               the product); use a different salt per stage for
+               independent thinning.
 
-  hash_sample        keep a row iff pmod(xxhash64(id, salt), D) < p*D —
-                     a pure function of the row id, so the sample is
-                     reproducible across runs, engines, partitionings
-                     and cluster sizes (no RNG state, no seed plumbing
-                     through executors). Same-salt fractions NEST (the
-                     10% sample is a subset of the 30% one — composing
-                     takes the min, not the product); use a different
-                     salt per stage for independent thinning.
-  stratified_sample  per-stratum fractions (e.g. per-domain or
-                     per-language target weights for a training mix),
-                     built on hash_sample so the mix is deterministic.
-
-Both are map-only single-pass filters — no shuffle, no sampleBy RNG.
+A map-only single-pass filter — no shuffle, no sampleBy RNG.
 """
 
 from __future__ import annotations
@@ -38,26 +33,3 @@ def hash_sample(
     bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(salt)), F.lit(_DENOM))
     return df.filter(bucket < int(fraction * _DENOM))
 
-
-def stratified_sample(
-    df: DataFrame,
-    fractions: dict[str, float],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    default_fraction: float = 0.0,
-    salt: str = "",
-) -> DataFrame:
-    """Per-stratum deterministic sampling: a training-mix operator
-    ("keep 100% of lang=X, 10% of lang=Y, drop the rest"). Strata not
-    in `fractions` get default_fraction. One map-only filter — the
-    per-stratum threshold is a CASE expression, not N passes."""
-    for k, v in fractions.items():
-        if not 0.0 <= v <= 1.0:
-            raise ValueError(f"fraction {v} for stratum {k!r} outside [0, 1]")
-    thresh = F.lit(int(default_fraction * _DENOM))
-    for k, v in sorted(fractions.items()):
-        thresh = F.when(
-            F.col(strata_col) == F.lit(k), F.lit(int(v * _DENOM))
-        ).otherwise(thresh)
-    bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(salt)), F.lit(_DENOM))
-    return df.filter(bucket < thresh)

@@ -57,34 +57,6 @@ def size_bucket_col(payload_col: str = "html") -> F.Column:
 # engine/ops/media.py's decode repartition.)
 
 
-def fits_broadcast_budget(
-    est_df: DataFrame,
-    bytes_expr: F.Column,
-    budget_bytes: int | None,
-) -> bool:
-    """Size-budgeted broadcast gate, factored out for every
-    |hosts|-sized dim table:
-    returns True iff sum(bytes_expr) over est_df fits budget_bytes, so
-    the caller may `F.broadcast` the dim side; otherwise the caller
-    must leave the join unhinted and let AQE pick the strategy from
-    ACTUAL runtime sizes. A forced broadcast of a table that only
-    LOOKS host-bounded (10^8 hosts x packed rule arrays = tens of GB)
-    is a driver OOM at web scale — the estimate costs one cheap agg
-    job (ids/lengths only, map-side combinable) and buys the gate.
-
-    budget_bytes=None disables forcing entirely (always AQE).
-    est_df may be any table whose bytes UPPER-BOUND the broadcast
-    candidate (e.g. the pre-aggregation rule rows for a packed-array
-    dim) so the estimate can ride a map-only scan instead of running
-    the dim's shuffle twice."""
-    if budget_bytes is None:
-        return False
-    est = est_df.select(
-        F.coalesce(F.sum(bytes_expr), F.lit(0)).alias("bytes")
-    ).collect()[0]
-    return int(est["bytes"]) <= int(budget_bytes)
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

@@ -22,32 +22,25 @@ Stages, each writing its own parquet table under <output>/:
                toward a trusted target set -> <output>/dsir_selected
                (engine/ops/dsir; Xie et al. 2023)
     sample     deterministic hash sample -> <output>/final
-    rebalance  (opt-in, --max-host-share) cap any host's token share
-               -> <output>/balanced (engine/ops/mix, exact hard cap)
-    split      (opt-in, --splits) host-keyed train/val/test labels
-               -> <output>/splits, partitioned by split
     pack       (opt-in, --pack-budget) sentence-aware chunking +
                fixed-token-budget example assembly -> <output>/examples
-               (engine/ops/pack; examples never mix splits; packing
-               stats recorded in the manifest; chunk text persisted to
-               <output>/chunks for the export join)
+               (engine/ops/pack; packing stats recorded in the
+               manifest; chunk text persisted to <output>/chunks for
+               the export join)
     export     (opt-in, --export-shard-mb) trainer-ready gzip JSONL
                shards -> <output>/export (engine/io/export; packed
                examples when --pack-budget is set, else the final
                docs table)
-    report     (opt-in, --report) corpus card over the final docs
-               table -> <output>/corpus_card.json (jobs/report.py);
-               --report-compare adds crawl-over-crawl deltas against
-               a previous run's card
 
 Stage resume: after each stage commits, <output>/corpus_manifest.json
 is atomically rewritten (tmp + rename, same discipline as
 engine/checkpoint.py). `--resume` skips every stage whose manifest
 entry exists AND whose output _SUCCESS marker is present — a crash
-loses at most the stage in flight, and a finished run reruns as five
-no-ops. The manifest keeps only the stages (and their side entries)
-of the invocation that wrote it, so a resume that drops an opt-in
-stage also drops its entry. Stage outputs are plain parquet tables:
+loses at most the stage in flight, and a finished run reruns as
+no-ops: five with the default chain, eight with every opt-in stage.
+The manifest keeps only the stages (and their side entries) of the
+invocation that wrote it, so a resume that drops an opt-in stage
+also drops its entry. Stage outputs are plain parquet tables:
 any stage can also be re-driven by its standalone job
 (jobs/curate.py) against the same directories.
 
@@ -59,6 +52,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -144,18 +138,7 @@ def run(args) -> dict:
             return
         dirty = True
         t0 = time.monotonic()
-        table_path = os.path.join(out, table)
-        rows = action(table_path)
-        # partitionBy writes under the session's dynamic
-        # partitionOverwriteMode commit WITHOUT a root _SUCCESS
-        # (observed on the splits stage: every resume re-ran split and
-        # cascaded through pack/export). The marker is this job's
-        # stage-completion contract, so guarantee it ourselves — the
-        # action has fully returned, which is exactly what _SUCCESS
-        # asserts.
-        marker = os.path.join(table_path, "_SUCCESS")
-        if os.path.isdir(table_path) and not os.path.exists(marker):
-            open(marker, "w").close()
+        rows = action(os.path.join(out, table))
         info = {"rows": int(rows), "wall_s": round(time.monotonic() - t0, 2)}
         if params:
             info["params"] = params
@@ -315,102 +298,6 @@ def run(args) -> dict:
         do_sample,
         params={"input": sample_input, "fraction": args.sample_fraction},
     )
-    docs_table = "final"
-
-    # -- optional: domain rebalance (host token-share cap) --------------
-    # try_parse_url: malformed crawl urls yield '' instead of an ANSI
-    # INVALID_URL crash (same discipline as engine/ops/urlnorm.py)
-    host_expr = F.lower(
-        F.coalesce(F.try_parse_url("url", F.lit("HOST")), F.lit(""))
-    )
-
-    if args.max_host_share < 1.0:
-
-        def do_rebalance(path: str) -> int:
-            from engine.ops.mix import rebalance_domains
-            from engine.ops.pack import whitespace_token_count
-
-            # temp column names: docs may already carry an n_tokens
-            # curation metric, which must survive into <output>/balanced
-            docs = spark.read.parquet(os.path.join(out, docs_table)).withColumn(
-                "_rb_host", host_expr
-            ).withColumn("_rb_tokens", whitespace_token_count(F.col("text")))
-            rebalance_domains(
-                docs,
-                args.max_host_share,
-                host_col="_rb_host",
-                token_col="_rb_tokens",
-                id_col="url",
-                exact=True,
-            ).drop("_rb_host", "_rb_tokens").write.mode("overwrite").parquet(
-                path
-            )
-            return spark.read.parquet(path).count()
-
-        stage(
-            "rebalance",
-            "balanced",
-            do_rebalance,
-            params={"max_host_share": args.max_host_share},
-        )
-        docs_table = "balanced"
-
-    # -- optional: temperature mix over a group column ------------------
-    if args.mix_alpha is not None:
-
-        def do_tempmix(path: str) -> int:
-            from engine.ops.mix import temperature_mix
-            from engine.ops.pack import whitespace_token_count
-
-            docs = spark.read.parquet(
-                os.path.join(out, docs_table)
-            ).withColumn("_tm_tokens", whitespace_token_count(F.col("text")))
-            temperature_mix(
-                docs,
-                args.mix_alpha,
-                group_col=args.mix_group,
-                token_col="_tm_tokens",
-                id_col="url",
-                min_group_tokens=args.mix_min_tokens,
-            ).drop("_tm_tokens").write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage(
-            "tempmix",
-            "tempered",
-            do_tempmix,
-            params={
-                # input is semantics-affecting: dropping --max-host-share
-                # on a resume must invalidate this stage (the repo's
-                # input-gating discipline, review r3)
-                "input": docs_table,
-                "mix_alpha": args.mix_alpha,
-                "mix_group": args.mix_group,
-                "mix_min_tokens": args.mix_min_tokens,
-            },
-        )
-        docs_table = "tempered"
-
-    # -- optional: host-keyed train/val/test split ----------------------
-    if args.splits:
-        weights = {
-            name: float(w)
-            for name, w in (kv.split("=") for kv in args.splits.split(","))
-        }
-
-        def do_split(path: str) -> int:
-            from engine.ops.mix import assign_splits
-
-            docs = spark.read.parquet(os.path.join(out, docs_table)).withColumn(
-                "_sp_host", host_expr
-            )
-            assign_splits(docs, weights, key_col="_sp_host").drop(
-                "_sp_host"
-            ).write.mode("overwrite").partitionBy("split").parquet(path)
-            return spark.read.parquet(path).count()
-
-        stage("split", "splits", do_split, params={"splits": args.splits})
-        docs_table = "splits"
 
     # -- optional: sentence-aware chunking + sequence packing -----------
     if args.pack_budget:
@@ -419,7 +306,7 @@ def run(args) -> dict:
             from engine.ops.pack import pack_sequences, packing_stats
             from engine.udfs import CHUNKS_DDL, chunk_map_in_pandas
 
-            docs = spark.read.parquet(os.path.join(out, docs_table))
+            docs = spark.read.parquet(os.path.join(out, "final"))
             # text was rewritten by linedup/curation, so spans are
             # recomputed inside the chunker (legacy-row fallback)
             src = docs.filter(F.length(F.coalesce("text", F.lit(""))) > 0).select(
@@ -428,11 +315,6 @@ def run(args) -> dict:
                 F.lit(None).cast("array<long>").alias("sent_spans"),
             )
             chunks = src.mapInPandas(chunk_map_in_pandas, CHUNKS_DDL)
-            split_col = None
-            if "split" in docs.columns:
-                labels = docs.select("url", "split")
-                chunks = chunks.join(labels, "url")
-                split_col = "split"
             token_col = None
             if getattr(args, "bpe_merges", 0):
                 # size examples in REAL subword tokens: train BPE on
@@ -449,6 +331,12 @@ def run(args) -> dict:
                     chunks, merges, text_col="chunk_text", count_only=True
                 )
                 token_col = "n_bpe_tokens"
+            else:
+                # a re-run without BPE must not keep a previous run's
+                # merges: the examples are now sized in whitespace words
+                manifest.pop("bpe", None)
+                if os.path.isdir(os.path.join(out, "bpe_merges")):
+                    shutil.rmtree(os.path.join(out, "bpe_merges"))
             # persist chunk text beside the assignments: the export
             # stage joins it back (and downstream vector jobs reuse it)
             chunks.write.mode("overwrite").parquet(os.path.join(out, "chunks"))
@@ -457,7 +345,6 @@ def run(args) -> dict:
                 chunks,
                 args.pack_budget,
                 n_shards=args.pack_shards,
-                split_col=split_col,
                 token_col=token_col,
             )
             asg.write.mode("overwrite").parquet(path)
@@ -471,7 +358,7 @@ def run(args) -> dict:
             "examples",
             do_pack,
             params={
-                "input": docs_table,
+                "input": "final",
                 "budget": args.pack_budget,
                 "shards": args.pack_shards,
                 "bpe_merges": getattr(args, "bpe_merges", 0),
@@ -495,7 +382,7 @@ def run(args) -> dict:
                 rows, key = assemble_examples(asg, chunks), "example_id"
             else:
                 rows, key = (
-                    spark.read.parquet(os.path.join(out, docs_table)),
+                    spark.read.parquet(os.path.join(out, "final")),
                     "url",
                 )
             info = export_jsonl(
@@ -513,68 +400,23 @@ def run(args) -> dict:
             do_export,
             params={
                 "packed": bool(args.pack_budget),
-                "input": "examples" if args.pack_budget else docs_table,
+                "input": "examples" if args.pack_budget else "final",
                 "shard_mb": args.export_shard_mb,
             },
         )
-
-    # -- optional: corpus card over the final docs table ----------------
-    # Runs every invocation when asked (no resume gate: the card costs
-    # a few agg passes over the FINAL table and rewriting it is
-    # idempotent — and a resumed run's card should reflect the tables
-    # as they now stand)
-    if args.report:
-        chain.append("report")
-        import types
-
-        from jobs.report import build_card, card_delta
-
-        card = build_card(
-            spark,
-            types.SimpleNamespace(
-                text_col="text",
-                id_col="url",
-                lang_col="lang",
-                host_col="host",
-                top_hosts=20,
-                top_ngrams=0,
-                ngram_n=10,
-            ),
-            os.path.join(out, docs_table),
-        )
-        if args.report_compare:
-            with open(args.report_compare) as f:
-                baseline = json.load(f)
-            base_card = baseline.get("card", baseline)
-            card["compare"] = {
-                "baseline": args.report_compare,
-                "delta": card_delta(card, base_card),
-            }
-        card_path = os.path.join(out, "corpus_card.json")
-        tmp = card_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"card": card, "table": docs_table}, f,
-                      indent=2, sort_keys=True)
-        os.replace(tmp, card_path)
-        manifest["card"] = {"table": docs_table,
-                            "docs": card["totals"]["docs"],
-                            "path": card_path}
 
     # a resume that drops an opt-in stage keeps only this chain's
     # entries, so the manifest names the tables the outputs came from
     manifest["stages"] = {
         k: v for k, v in manifest["stages"].items() if k in chain
     }
-    for k, owner in (
-        ("packing", "pack"), ("bpe", "pack"), ("export", "export"),
-        ("card", "report"),
-    ):
+    for k, owner in (("packing", "pack"), ("bpe", "pack"), ("export", "export")):
         if owner not in chain:
             manifest.pop(k, None)
     _write_manifest(out, manifest)
 
     result = {"output": out, "stages": manifest["stages"]}
-    for k in ("packing", "bpe", "export", "card"):
+    for k in ("packing", "bpe", "export"):
         if k in manifest:
             result[k] = manifest[k]
     print(json.dumps(result))
@@ -638,56 +480,11 @@ def _parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--sample-fraction", type=float, default=1.0)
     p.add_argument(
-        "--report",
-        action="store_true",
-        help="write <output>/corpus_card.json (jobs/report.py card) "
-        "over the final docs table after the chain finishes",
-    )
-    p.add_argument(
-        "--report-compare",
-        default=None,
-        help="with --report: a previous run's corpus_card.json — the "
-        "new card gains crawl-over-crawl deltas against it",
-    )
-    p.add_argument(
-        "--max-host-share",
-        type=float,
-        default=1.0,
-        help="cap any one host at this token share of the corpus "
-        "(<1.0 enables the rebalance stage; exact hard cap)",
-    )
-    p.add_argument(
-        "--mix-alpha",
-        type=float,
-        default=None,
-        help="temperature-based source mixing (XLM-R rule): resample "
-        "so group token shares follow share^alpha (alpha<1 flattens "
-        "toward uniform; downsample-only)",
-    )
-    p.add_argument(
-        "--mix-group",
-        default="lang",
-        help="group column for --mix-alpha (default lang)",
-    )
-    p.add_argument(
-        "--mix-min-tokens",
-        type=int,
-        default=0,
-        help="groups below this token count are kept whole and "
-        "excluded from the temperature normalizer (guards against a "
-        "stray singleton group crushing the real mix)",
-    )
-    p.add_argument(
-        "--splits",
-        default=None,
-        help='host-keyed split weights, e.g. "train=0.98,val=0.01,test=0.01"',
-    )
-    p.add_argument(
         "--pack-budget",
         type=int,
         default=None,
         help="pack chunks into examples of at most this many tokens "
-        "(enables the chunk+pack stage; examples never mix splits)",
+        "(enables the chunk+pack stage)",
     )
     p.add_argument("--pack-shards", type=int, default=64)
     p.add_argument(

@@ -90,55 +90,6 @@ def test_partial_resume_recomputes_only_missing_stages(spark, tmp_path, pages_pa
     }
 
 
-def test_mix_stages_rebalance_split_pack(spark, tmp_path, pages_path):
-    """Opt-in tail stages: rebalance -> split -> pack. Splits are
-    host-cohesive, examples never mix splits, packing stats land in
-    the manifest, and every chunk of the split table is assigned."""
-    from jobs.corpus import run
-
-    out = str(tmp_path / "corpus3")
-    res = run(
-        _args(
-            pages_path,
-            out,
-            min_tokens=5,
-            sample_fraction=1.0,
-            max_host_share=0.5,
-            splits="train=0.8,val=0.1,test=0.1",
-            pack_budget=128,
-            pack_shards=8,
-        )
-    )
-    st = res["stages"]
-    assert {"rebalance", "split", "pack"} <= set(st)
-    assert st["rebalance"]["rows"] <= st["sample"]["rows"]
-    assert st["split"]["rows"] == st["rebalance"]["rows"]
-
-    from pyspark.sql import functions as F
-
-    splits = spark.read.parquet(f"{out}/splits")
-    assert splits.groupBy("url").agg(
-        F.countDistinct("split").alias("k")
-    ).filter("k > 1").count() == 0
-
-    ex = spark.read.parquet(f"{out}/examples")
-    assert ex.count() == st["pack"]["rows"] > 0
-    assert "split" in ex.columns
-    # each doc's assignments carry its split label
-    lab = splits.select(F.col("url").alias("doc_key"), F.col("split").alias("want"))
-    assert ex.join(lab, "doc_key").filter("split != want").count() == 0
-    # budget respected for non-oversize examples
-    bad = (
-        ex.groupBy("split", "shard", "example_ix")
-        .agg(F.sum("n_tokens").alias("tok"), F.max(F.col("oversize").cast("int")).alias("over"))
-        .filter("over = 0 AND tok > 128")
-        .count()
-    )
-    assert bad == 0
-    assert res["packing"]["n_chunks"] == ex.count()
-    assert 0 < res["packing"]["fill_rate"] <= 1.0
-
-
 def test_pack_with_trained_bpe_tokens(spark, tmp_path, pages_path):
     """--bpe-merges: the pack stage sizes examples in trained subword
     tokens; merges persist beside the corpus and re-applying them
@@ -198,6 +149,25 @@ def test_pack_with_trained_bpe_tokens(spark, tmp_path, pages_path):
     assert joined.filter("n_tokens != n_bpe_tokens").count() == 0
     assert joined.count() == ex.count()
 
+    # resume without BPE: pack re-runs by whitespace words and the old
+    # merges leave the result, the manifest and the output directory
+    res2 = run(
+        _args(
+            pages_path,
+            out,
+            min_tokens=5,
+            sample_fraction=1.0,
+            pack_budget=256,
+            pack_shards=4,
+            bpe_merges=0,
+            resume=True,
+        )
+    )
+    assert "bpe" not in res2
+    with open(f"{out}/corpus_manifest.json") as f:
+        assert "bpe" not in json.load(f)
+    assert not os.path.exists(f"{out}/bpe_merges")
+
 
 def test_export_stage_ships_packed_examples(spark, tmp_path, pages_path):
     """--export-shard-mb + --pack-budget: the export stage assembles
@@ -224,13 +194,12 @@ def test_export_stage_ships_packed_examples(spark, tmp_path, pages_path):
     assert os.path.exists(f"{out}/export/_SUCCESS")
     lines = [r for v in _read_shards(f"{out}/export").values() for r in v]
     assert len(lines) == st["export"]["rows"]
-    n_examples = (
-        spark.read.parquet(f"{out}/examples")
-        .select("shard", "example_ix")
-        .distinct()
-        .count()
-    )
+    examples = spark.read.parquet(f"{out}/examples")
+    n_examples = examples.select("shard", "example_ix").distinct().count()
     assert len(lines) == n_examples
+    # packing stats land in the result: every chunk assigned once
+    assert res["packing"]["n_chunks"] == examples.count()
+    assert 0 < res["packing"]["fill_rate"] <= 1.0
     for r in lines[:5]:
         assert {"example_id", "text", "n_tokens", "n_seqs"} <= set(r)
         assert r["text"]
@@ -380,108 +349,21 @@ def test_curate_stage_compression_and_code_knobs(spark, tmp_path, pages_path):
     assert res2["stages"]["curate"]["rows"] <= res["stages"]["curate"]["rows"]
 
 
-def test_temperature_mix_stage(spark, tmp_path, pages_path):
-    """--mix-alpha flattens the lang mix between rebalance and splits;
-    the stage is params-gated like the others."""
-    from jobs.corpus import run
-
-    out = str(tmp_path / "corpus")
-    res = run(
-        _args(
-            pages_path,
-            out,
-            min_tokens=5,
-            sample_fraction=1.0,
-            mix_alpha=0.5,
-        )
-    )
-    assert "tempmix" in res["stages"]
-    assert os.path.exists(os.path.join(out, "tempered", "_SUCCESS"))
-    # tempmix runs on the sampled final table (downsample-only)
-    assert 0 < res["stages"]["tempmix"]["rows"] <= res["stages"]["sample"]["rows"]
-
-
-def test_report_stage_writes_card_and_compares(spark, tmp_path, pages_path):
-    """--report writes <output>/corpus_card.json over the final docs
-    table; --report-compare adds crawl-over-crawl deltas against a
-    previous run's card."""
-    from jobs.corpus import run
-
-    out1 = str(tmp_path / "c1")
-    res1 = run(
-        _args(pages_path, out1, min_tokens=5, sample_fraction=0.5,
-              report=True)
-    )
-    card_path = f"{out1}/corpus_card.json"
-    assert os.path.exists(card_path)
-    with open(card_path) as f:
-        card1 = json.load(f)
-    assert card1["table"] == "final"
-    assert card1["card"]["totals"]["docs"] == res1["stages"]["sample"]["rows"]
-    assert res1["card"]["docs"] == card1["card"]["totals"]["docs"]
-
-    # second run keeps everything -> deltas vs run 1 are the size gap
-    out2 = str(tmp_path / "c2")
-    res2 = run(
-        _args(pages_path, out2, min_tokens=5, sample_fraction=1.0,
-              report=True, report_compare=card_path)
-    )
-    with open(f"{out2}/corpus_card.json") as f:
-        card2 = json.load(f)
-    d = card2["card"]["compare"]["delta"]
-    assert d["totals"]["docs"] == (
-        res2["stages"]["sample"]["rows"] - res1["stages"]["sample"]["rows"]
-    )
-
-
-def test_resume_skips_partitioned_split_stage(spark, tmp_path, pages_path):
-    """The splits table is written partitionBy(split) under the
-    session's dynamic partitionOverwriteMode, whose commit path skips
-    the root _SUCCESS — without the stage-level marker guarantee,
-    every --resume re-ran split and cascaded through pack/export."""
-    from jobs.corpus import run
-
-    out = str(tmp_path / "corpus_sp")
-    kw = dict(
-        min_tokens=5,
-        sample_fraction=1.0,
-        splits="train=0.8,val=0.1,test=0.1",
-        pack_budget=200,
-    )
-    run(_args(pages_path, out, **kw))
-    marker = os.path.join(out, "splits", "_SUCCESS")
-    assert os.path.exists(marker)
-    mark_mtimes = {
-        t: os.path.getmtime(os.path.join(out, t, "_SUCCESS"))
-        for t in ("splits", "examples", "final")
-    }
-    res2 = run(_args(pages_path, out, resume=True, **kw))
-    after = {
-        t: os.path.getmtime(os.path.join(out, t, "_SUCCESS"))
-        for t in ("splits", "examples", "final")
-    }
-    assert after == mark_mtimes  # every stage skipped, nothing rewritten
-    assert set(res2["stages"]) >= {"split", "pack"}
-
-
 # -- kill-mid-stage chaos harness (VERDICT r3 next #7) ----------------
 
-# an 11-stage configuration: every opt-in stage enabled (dsir's target
+# an 8-stage configuration: every opt-in stage enabled (dsir's target
 # is built by the chaos_kw fixture)
 CHAOS_KW = dict(
     min_tokens=5,
     sample_fraction=0.5,
     dsir_fraction=0.8,
-    max_host_share=0.5,
-    mix_alpha=0.5,
-    splits="train=0.8,val=0.2",
     pack_budget=128,
     pack_shards=4,
     export_shard_mb=1,
 )
 CHAOS_STAGES = [
-    "extract", "neardup", "linedup", "curate", "dsir", "sample",
-    "rebalance", "tempmix", "split", "pack", "export",
+    "extract", "neardup", "linedup", "curate", "dsir", "sample", "pack",
+    "export",
 ]
 
 
@@ -523,7 +405,7 @@ def chaos_ref(spark, tmp_path_factory, pages_path, chaos_kw):
 
     out = str(tmp_path_factory.mktemp("chaosref") / "corpus")
     res = run(_args(pages_path, out, **chaos_kw))
-    # the config really exercises all 11 stages, in this order
+    # the config really exercises all 8 stages, in this order
     assert list(res["stages"]) == CHAOS_STAGES
     assert res["stages"]["export"]["rows"] > 0
     return out, res

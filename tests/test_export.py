@@ -9,7 +9,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _read_shards(path: str) -> dict[int, list[dict]]:
@@ -115,48 +114,6 @@ def test_assemble_examples_reconstructs_ordered_text(spark):
         assert r["example_id"] == f"{r['shard']}/{r['example_ix']}"
     # token accounting matches the assignments
     assert all(r["n_tokens"] > 0 for r in rows)
-
-
-def test_assemble_examples_carries_split(spark):
-    from engine.ops.pack import assemble_examples, pack_sequences
-
-    chunks = _chunks(spark).withColumn(
-        "split", F.when(F.col("url") < "doc06", "train").otherwise("val")
-    )
-    asg = pack_sequences(chunks, budget=16, n_shards=2, split_col="split")
-    ex = assemble_examples(asg, chunks)
-    assert "split" in ex.columns
-    # no example mixes splits, and ids embed the split
-    for r in ex.collect():
-        assert r["example_id"].startswith(f"{r['split']}/")
-    got = {r["split"] for r in ex.collect()}
-    assert got == {"train", "val"}
-
-
-def test_assemble_examples_custom_split_col(spark):
-    # review r3: a hardcoded 'split' lookup grouped by (shard,
-    # example_ix) only when pack_sequences used a different split_col,
-    # concatenating train and val examples into one row
-    from engine.ops.pack import assemble_examples, pack_sequences
-
-    chunks = _chunks(spark).withColumn(
-        "sp", F.when(F.col("url") < "doc06", "train").otherwise("val")
-    )
-    asg = pack_sequences(chunks, budget=16, n_shards=2, split_col="sp")
-    ex = assemble_examples(asg, chunks, split_col="sp")
-    assert "sp" in ex.columns
-    for r in ex.collect():
-        assert r["example_id"].startswith(f"{r['sp']}/")
-    # per-(shard, example_ix) there may be one row per split — the
-    # grouping must keep them apart
-    ref = assemble_examples(
-        pack_sequences(chunks, budget=16, n_shards=2, split_col="sp")
-        .withColumnRenamed("sp", "split"),
-        chunks,
-    )
-    assert sorted(r["text"] for r in ex.collect()) == sorted(
-        r["text"] for r in ref.collect()
-    )
 
 
 def test_export_shard_sizing_counts_octets(docs, tmp_path):

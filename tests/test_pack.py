@@ -159,39 +159,6 @@ def test_pack_documents_integration(spark):
     assert s == s2
 
 
-def test_pack_split_isolation(spark):
-    """With split_col, an example can never mix chunks from different
-    splits — the label joins the group key — and within a split the
-    packing equals packing that split alone."""
-    chunks = _synth_chunks(spark)
-    from engine.ops.mix import assign_splits
-
-    lab = assign_splits(
-        chunks, {"train": 0.8, "test": 0.2}, key_col="url"
-    )
-    got = pack_sequences(lab, BUDGET, n_shards=8, token_col="nt", split_col="split")
-    # example identity is (split, shard, example_ix): each assignment
-    # carries exactly its doc's label, so no example can mix splits
-    labels = lab.select(F.col("url").alias("doc_key"), F.col("split").alias("want"))
-    wrong = (
-        got.join(labels.distinct(), "doc_key")
-        .filter(F.col("split") != F.col("want"))
-        .count()
-    )
-    assert wrong == 0
-    # per-split equivalence: packing the train slice alone is identical
-    train_alone = pack_sequences(
-        lab.filter("split = 'train'"), BUDGET, n_shards=8, token_col="nt"
-    )
-    a = got.filter("split = 'train'").drop("split").orderBy("doc_key", "chunk_ix").toPandas()
-    b = train_alone.orderBy("doc_key", "chunk_ix").toPandas()
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
-    # stats keyed per split
-    s = packing_stats(got, BUDGET)
-    assert "split" in [c for c in ("split",) if "split" in got.columns]
-    assert s.collect()[0]["n_chunks"] == chunks.count()
-
-
 def test_packing_stats_all_oversize_no_crash(spark):
     """Round-3 review regression: every chunk exceeding the budget
     used to crash packing_stats with an ANSI DIVIDE_BY_ZERO; fill_rate

@@ -227,29 +227,6 @@ def test_lsh_candidate_join_is_hash_equi_join(spark):
     ), p
 
 
-def test_rebalance_corpus_is_never_shuffled(spark):
-    """rebalance_domains (default mode): the corpus side must reach
-    the output through a broadcast join + filter only — the one
-    Exchange in the plan belongs to the per-host stats agg, and the
-    over-cap keep-fraction side arrives via BroadcastExchange."""
-    from engine.ops.mix import rebalance_domains
-
-    docs = spark.createDataFrame(
-        [(i, f"h{i % 5}", 10 + i % 7) for i in range(200)],
-        "doc_id long, host string, n_tokens long",
-    )
-    p = plan(rebalance_domains(docs, 0.25))
-    assert "BroadcastHashJoin" in p, p
-    assert "SortMergeJoin" not in p, p
-    # exchanges: only the stats agg's hash exchanges feeding the
-    # broadcast side; the probe (corpus) side of the BHJ must not
-    # have a shuffle between scan and join. Cheap proxy: no Exchange
-    # with the corpus's full row schema (doc_id AND n_tokens).
-    for ln in p.splitlines():
-        if "Exchange" in ln and "broadcast" not in ln.lower():
-            assert "doc_id" not in ln, p
-
-
 def test_pack_sequences_single_exchange(spark):
     """pack_sequences: exactly one hash Exchange (co-locating shard
     metadata for applyInPandas) and the shuffled payload is metadata

@@ -3,9 +3,8 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from engine.ops.sample import hash_sample, stratified_sample
+from engine.ops.sample import hash_sample
 
 SF_01 = "/root/testdata/sf0.01"
 
@@ -46,29 +45,6 @@ def test_hash_sample_partitioning_invariant(spark, docs):
     assert one == many
 
 
-def test_stratified_sample_mix(spark, docs):
-    got = stratified_sample(
-        docs, {"en": 1.0, "de": 0.5}, strata_col="lang"
-    )
-    per = {
-        r["lang"]: r["n"]
-        for r in got.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    base = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert per["en"] == base["en"]  # keep-all stratum is exact
-    assert abs(per.get("de", 0) - 0.5 * base["de"]) <= 0.25 * base["de"]
-    assert set(per) == {"en", "de"}  # default_fraction=0 drops the rest
-    # plan stays map-only: one filter, no shuffle
-    from tests.test_plans import plan
-
-    assert "Exchange" not in plan(got)
-
-
 def test_fraction_validation(spark, docs):
     with pytest.raises(ValueError):
         hash_sample(docs, 1.5)
-    with pytest.raises(ValueError):
-        stratified_sample(docs, {"en": -0.1})

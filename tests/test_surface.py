@@ -20,7 +20,6 @@ ENTRY_POINTS = (
     "jobs.compact",
     "jobs.corpus",
     "jobs.curate",
-    "jobs.report",
     "__spark_entry__",
     "ingestbench.run",
     "scripts.check_oracles",
