@@ -1,7 +1,7 @@
 """Checkpoint / resume (SURVEY.md §2 A12; BASELINE.json:14
 "resumable from checkpoint").
 
-Work unit = one partition key (day x host-bucket,
+Work unit = one partition key (the host bucket,
 engine.partitioning.partition_key_col). A JSON manifest under
 <output>/_manifest/<run_id>.json records the set of finished keys;
 writes are idempotent per-partition dynamic overwrites, so:
@@ -13,7 +13,7 @@ writes are idempotent per-partition dynamic overwrites, so:
 
 Resume = broadcast anti-join of the input against the done-set: only
 unfinished keys re-enter the pipeline. The manifest is tiny (one row
-per work unit — ~30 days x 64 buckets at any scale), so the anti-join
+per work unit — one per host bucket at any scale), so the anti-join
 always broadcasts.
 """
 

@@ -110,11 +110,11 @@ def host_bucket_col(url_col: str = "url", host_buckets: int = 64) -> F.Column:
 def with_write_partitions(
     df, url_col: str = "url", ts_col: str = "warc_ts", host_buckets: int = 64
 ):
-    """Attach (day, pbucket) — the physical write-partition columns.
-    These MUST equal the checkpoint work-unit key components
-    (partition_key_col): dynamic partition overwrite is idempotent
-    per work unit only if the write partitioning matches the resume
-    granularity."""
+    """Attach day and pbucket. pbucket is the physical write partition
+    and MUST equal the checkpoint work-unit key (partition_key_col):
+    dynamic partition overwrite is idempotent per work unit only if the
+    write partitioning matches the resume granularity. day is a plain
+    string column, not a partition level."""
     return df.withColumn("day", day_col(ts_col)).withColumn(
         "pbucket", host_bucket_col(url_col, host_buckets)
     )
@@ -130,8 +130,8 @@ def partition_key_col(
     re-crawls of a url carry different capture days, and per-url
     latest-capture dedup (A10) is only global if every capture of a
     url lands in the same resume work unit. Host is stable per url,
-    so bucket(host) co-locates them; `day` remains a write-layout
-    partition column for time-range pruning, never a work-unit key.
+    so bucket(host) co-locates them; `day` is a plain column, never a
+    work-unit key or a partition level.
     At 10^12 rows raise host_buckets (e.g. 4096) for finer resume
     granularity — the manifest stays broadcastable either way."""
     return F.pmod(F.xxhash64(host_col(url_col)), F.lit(host_buckets)).cast("string")

@@ -127,11 +127,13 @@ def build_chunks(extracted: DataFrame) -> DataFrame:
 
 
 def build_vectors(chunks: DataFrame) -> DataFrame:
-    """chunks -> vectors mirroring the embeddings table shape (A8)."""
+    """chunks -> the same rows with vec_id, embedding and label appended
+    (A8): one frame holds each chunk's text and its vector, so the
+    ingest job writes a single `chunks` table and feeds the vector
+    sink from it."""
     return chunks.select(
+        "*",
         F.xxhash64("url", "chunk_ix").alias("vec_id"),
-        "url",
-        "chunk_ix",
         embed_udf(F.col("chunk_text")).alias("embedding"),
         F.pmod(F.xxhash64("chunk_text"), F.lit(10)).cast("int").alias("label"),
     )
@@ -172,10 +174,9 @@ def merge_latest(
     carry distinct capture times, so this only matters for synthetic
     equal-ts duplicates.)
 
-    Pair with dynamic partition overwrite: write only the (day,
-    pbucket) partitions present in the merged output of the AFFECTED
-    urls, leaving untouched partitions' files alone (jobs/ingest.py's
-    write path / engine.io.tables.overwrite_partitions).
+    Pair with dynamic partition overwrite: write only the pbucket
+    partitions of the AFFECTED urls, leaving untouched partitions'
+    files alone (upsert_latest / engine.io.tables.overwrite_partitions).
     """
     cols = [c for c in EXTRACTED_COLS if c != "url"]
     both = existing.select(*EXTRACTED_COLS).unionByName(
@@ -197,28 +198,18 @@ def merge_latest(
 def upsert_latest(spark, table_path: str, incoming: DataFrame) -> dict:
     """Partition-pruned IN-PLACE re-crawl upsert (merge_latest's scale
     path): fold `incoming` extracted rows (carrying day/pbucket) into
-    the existing extracted table at `table_path`, reading and
-    rewriting ONLY affected partitions. Untouched partitions' files
-    are never opened, let alone rewritten — at 100 TB a 1% re-crawl
-    must not cost a full-table read+write (the r2 verdict's top scale
-    objection to merge_latest).
+    the existing extracted table at `table_path`, partitioned by
+    pbucket, reading and rewriting ONLY incoming's buckets. Untouched
+    buckets' files are never opened, let alone rewritten — at 100 TB a
+    1% re-crawl must not cost a full-table read+write.
 
-    Pruning is two-level and exact:
-      * pbucket: a url's host bucket is a pure function of the url, so
-        every PRIOR capture of a re-crawled url lives under pbucket ∈
-        incoming's buckets — a metadata-only partition-pruned scan;
-      * url: within those buckets, a semi-join against incoming's urls
-        keeps only rows that can change. ALL days of those buckets are
-        scanned (a prior capture may sit under any day), which is why
-        the bucket count is the resume/merge granularity knob.
-
-    Affected partitions = partitions holding a prior capture of a
-    re-crawled url (they may lose that row) ∪ partitions where a merge
-    winner lands. Each is rewritten as (its prior rows with urls NOT in
-    incoming) ∪ (merge winners landing there); a partition emptied by
-    the merge (its only rows lost to newer captures elsewhere) is
-    deleted — dynamic overwrite alone cannot express "this partition
-    now has zero rows". Rewrite rows are materialized (localCheckpoint)
+    A url's host bucket is a pure function of the url, so every prior
+    capture of a re-crawled url AND its merge winner live in one of
+    incoming's buckets: the affected partitions are exactly those
+    buckets, none of them can be emptied by the merge, and each is
+    rewritten as (its prior rows with urls NOT in incoming) ∪ (merge
+    winners). The twin of upsert_replace_by_key for a table where a
+    key owns one row. Rewrite rows are materialized (localCheckpoint)
     BEFORE the overwrite, since they are computed FROM the files the
     overwrite replaces; Iceberg's overwritePartitions does the same
     read-then-replace under snapshot isolation, no staging copy needed.
@@ -226,60 +217,25 @@ def upsert_latest(spark, table_path: str, incoming: DataFrame) -> dict:
     Idempotent (latest-wins is a semilattice): re-running the same
     upsert after a crash converges to the same table.
     """
-    # partition-column inference reads day=yyyy-MM-dd dirs back as DATE;
-    # the pipeline's day column is a string — normalize so the affected-
-    # partition set and the semi-join compare like with like
-    prior = spark.read.parquet(table_path).withColumn(
-        "day", F.col("day").cast("string")
-    )
-    in_urls = incoming.select("url").distinct().localCheckpoint(eager=True)
-    buckets = [
-        r["pbucket"] for r in incoming.select("pbucket").distinct().collect()
-    ]
-    prior_b = prior.filter(F.col("pbucket").isin(buckets))
-    prior_hits = prior_b.join(in_urls, "url", "left_semi").localCheckpoint(
-        eager=True
-    )
+    from engine.io.tables import overwrite_partitions
     from engine.partitioning import with_write_partitions
 
+    buckets = sorted(
+        r["pbucket"] for r in incoming.select("pbucket").distinct().collect()
+    )
+    if not buckets:
+        return {"affected_partitions": 0}
+    prior_b = spark.read.parquet(table_path).filter(F.col("pbucket").isin(buckets))
+    in_urls = incoming.select("url").distinct()
     merged = with_write_partitions(
-        merge_latest(
-            prior_hits.drop("day", "pbucket"), incoming.drop("day", "pbucket")
-        )
-    ).localCheckpoint(eager=True)
-    aff = {
-        (r["day"], r["pbucket"])
-        for r in prior_hits.select("day", "pbucket").distinct().collect()
-    } | {
-        (r["day"], r["pbucket"])
-        for r in merged.select("day", "pbucket").distinct().collect()
-    }
-    if not aff:
-        return {"affected_partitions": 0, "emptied_partitions": 0}
-    aff_df = F.broadcast(
-        spark.createDataFrame(sorted(aff), "day string, pbucket int")
+        merge_latest(prior_b.join(in_urls, "url", "left_semi"), incoming)
     )
-    kept = prior_b.join(aff_df, ["day", "pbucket"], "left_semi").join(
-        in_urls, "url", "left_anti"
-    )
+    kept = prior_b.join(in_urls, "url", "left_anti")
     out = kept.select(*merged.columns).unionByName(merged)
     # materialize before overwriting the partitions `kept` reads from
     out = out.localCheckpoint(eager=True)
-    from engine.io.tables import overwrite_partitions
-
-    overwrite_partitions(out, table_path, ["day", "pbucket"])
-    written = {
-        (r["day"], r["pbucket"])
-        for r in out.select("day", "pbucket").distinct().collect()
-    }
-    emptied = aff - written
-    from engine.io.tables import delete_partition
-
-    for day, pb in emptied:
-        # through the table seam: raises on failure / non-local paths
-        # (a silently-kept superseded partition violates latest-wins)
-        delete_partition(table_path, {"day": day, "pbucket": pb})
-    return {"affected_partitions": len(aff), "emptied_partitions": len(emptied)}
+    overwrite_partitions(out, table_path, ["pbucket"])
+    return {"affected_partitions": len(buckets)}
 
 
 def with_partition_key(pages: DataFrame, host_buckets: int = 64) -> DataFrame:

@@ -1,5 +1,5 @@
 """Partition compaction job — small-file management for the
-extracted/chunks/vectors tables (SURVEY.md §2 B3/A12 extension).
+extracted/chunks/lineage tables (SURVEY.md §2 B3/A12 extension).
 
 Resume re-writes and streaming micro-batches fragment partitions into
 many small files; a 10^12-row table then pays footer-per-file scan
@@ -37,8 +37,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def discover_partition_cols(table_path: str) -> list[str]:
     """Partition columns from the directory layout (hive-style
-    `col=value` levels) — (day, pbucket) for extracted, (pbucket,) for
-    chunks/vectors; on Iceberg the same comes from the table spec."""
+    `col=value` levels) — (pbucket,) for ingest's extracted and chunks
+    tables, (run_id, pbucket) for its lineage, (day, pbucket) for an
+    extracted table written by earlier versions; on Iceberg the same
+    comes from the table spec."""
     cols: list[str] = []
     p = table_path
     while True:
@@ -95,14 +97,14 @@ def compact(
     spark, table_path: str, target_bytes: int = 128 << 20, key_col: str = "url"
 ) -> dict:
     """Rewrite fragmented partitions of a hive-partitioned table
-    (layout discovered from the directories — (day, pbucket) for
-    extracted, (pbucket,) for chunks/vectors). Returns {partitions,
-    files_before, files_after_planned}.
+    (layout discovered from the directories, see
+    discover_partition_cols). Returns {partitions, files_before,
+    files_after_planned}.
 
     key_col seeds the deterministic file-slot hash; any column that is
-    ~uniformly distributed within a partition works (url for
-    extracted/chunks, vec_id for vectors — ADVICE r2: not every table
-    carries a url column)."""
+    ~uniformly distributed within a partition works (url for ingest's
+    extracted/chunks; another key, e.g. vec_id, for a table without a
+    url column)."""
     from pyspark.sql import functions as F
 
     plan = plan_compaction(table_path, target_bytes)

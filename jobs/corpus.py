@@ -63,6 +63,12 @@ from pyspark.sql import functions as F  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 
 MANIFEST = "corpus_manifest.json"
+# each opt-in stage's side entries in the manifest and tables under <output>/
+_OPT_IN = {
+    "dsir": ((), ("dsir_selected",)),
+    "pack": (("packing", "bpe"), ("examples", "chunks", "bpe_merges")),
+    "export": (("export",), ("export",)),
+}
 
 
 def _load_manifest(out_dir: str) -> dict:
@@ -406,13 +412,17 @@ def run(args) -> dict:
         )
 
     # a resume that drops an opt-in stage keeps only this chain's
-    # entries, so the manifest names the tables the outputs came from
+    # entries and tables, so the manifest names the tables the outputs
+    # came from and the output holds no table it does not name
     manifest["stages"] = {
         k: v for k, v in manifest["stages"].items() if k in chain
     }
-    for k, owner in (("packing", "pack"), ("bpe", "pack"), ("export", "export")):
+    for owner, (keys, tables) in _OPT_IN.items():
         if owner not in chain:
-            manifest.pop(k, None)
+            for k in keys:
+                manifest.pop(k, None)
+            for t in tables:
+                shutil.rmtree(os.path.join(out, t), ignore_errors=True)
     _write_manifest(out, manifest)
 
     result = {"output": out, "stages": manifest["stages"]}

@@ -6,18 +6,18 @@
 Stages per COMMIT BATCH (a group of host-bucket work units):
 corpus/table scan -> partition-key filter -> fused route+extract
 (Arrow UDF) -> per-url dedup -> extracted write -> [delta: changed
-docs] -> chunk (mapInPandas) -> chunks write -> embed -> vectors
-write -> lineage write -> [vector-index puts/deletes] -> [upsert] ->
-manifest commit for the batch. Works identically from
+docs] -> chunk (mapInPandas) + embed -> chunks write -> lineage write
+-> [vector-index puts/deletes] -> [upsert] -> manifest commit for the
+batch. Works identically from
 `python jobs/ingest.py` in local mode (the sandbox has no cluster).
 
-One materialized batch (_ingest_batch): the extracted batch, its
-chunks and their vectors are each persisted, written once and fed on
-from memory. The extracted batch feeds the chunker (through
-changed_docs in delta mode), lineage and upsert_latest; the chunks feed
-the embedder and the stale-key delete set; the vectors feed the
-vector-index puts. The job reads back none of the tables it writes,
-and a batch unpersists what it cached before the next one starts.
+One materialized batch (_ingest_batch): the extracted batch and its
+embedded chunks are each persisted, written once and fed on from
+memory. The extracted batch feeds the chunker (through changed_docs in
+delta mode), lineage and upsert_latest; the embedded chunks feed the
+vector-index puts and the stale-key delete set. The job reads back none
+of the tables it writes, and a batch unpersists what it cached before
+the next one starts.
 
 Incremental commit (SURVEY.md §3.3 step 4): the manifest is updated
 after EVERY batch, not once at job end, so a crash mid-run loses at
@@ -38,14 +38,22 @@ bucketed by the same host hash (bucket(N, host) partition transform)
 the batch filter prunes at metadata level, making the re-scan free.
 --commit-batches 1 restores the single-scan single-commit plan.
 
-Table layout: extracted is partitioned by (day, pbucket); chunks and
-vectors by (pbucket) alone — pbucket is a pure function of url, so it
-is recomputable on chunk/vector rows without carrying warc_ts through
-the chunker, and it matches the batch commit unit exactly (a re-done
-batch dynamically overwrites exactly its own pbucket partitions).
-Lineage is partitioned by (run_id, pbucket) and dynamically overwritten
-per batch — a re-done batch REPLACES its lineage rows instead of
-double-appending them.
+Table layout: extracted and chunks are partitioned by pbucket alone,
+the host bucket that is also the resume work unit and the delta prune
+key. pbucket is a pure function of url, so it is recomputable on chunk
+rows without carrying warc_ts through the chunker, and a re-done batch
+dynamically overwrites exactly its own buckets. extracted keeps `day`
+as a plain string column; no reader prunes by it, and a day level
+would multiply the files per batch by the days it spans. chunks holds
+each chunk's text with its vec_id, embedding and label: there is no
+separate vectors table. Lineage is partitioned by (run_id, pbucket)
+and dynamically overwritten per batch — a re-done batch REPLACES its
+lineage rows instead of double-appending them. An extracted table
+written in the earlier (day, pbucket) layout is refused as --output
+(a --resume or rerun) and as --upsert-into, before any write: a
+bucket-grain overwrite would mix the two layouts in one table. Such
+tables still serve as --delta-against / --prior-chunks inputs, which
+are only read.
 """
 
 from __future__ import annotations
@@ -101,6 +109,14 @@ def _has_parquet_files(path: str) -> bool:
     return False
 
 
+def _day_partitioned(table: str) -> bool:
+    """True if `table` is a local extracted table in the earlier
+    (day, pbucket) layout, i.e. has `day=` directories at its root."""
+    return os.path.isdir(table) and any(
+        d.startswith("day=") for d in os.listdir(table)
+    )
+
+
 def _batches(n_batches: int) -> list[list[str]]:
     """Split the static part_key domain (0..HOST_BUCKETS-1, stringly —
     see engine.partitioning.partition_key_col) into n_batches groups."""
@@ -115,9 +131,9 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
     """Extract, chunk, embed, trace and sink one commit batch of
     `pages` (host buckets `buckets`), adding its counts to `totals`.
     Every table is computed from frames this call holds: the extracted
-    batch, its chunks and their vectors are each persisted once,
-    written once and fed on from memory — the job never reads back a
-    table it writes. The persisted frames are appended to `cached`;
+    batch and its embedded chunks are each persisted once, written once
+    and fed on from memory — the job never reads back a table it
+    writes. The persisted frames are appended to `cached`;
     the caller unpersists them. Returns False for an empty batch,
     which writes nothing past `extracted`."""
     from engine.partitioning import host_bucket_col, with_write_partitions
@@ -126,15 +142,17 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
         cached.append(df.persist())
         return df
 
-    extracted = build_extracted(
-        pages.drop("part_key"), num_partitions=args.partitions
+    extracted = keep(
+        with_write_partitions(
+            build_extracted(pages.drop("part_key"), num_partitions=args.partitions)
+        )
     )
-    extracted, obs = observe_extraction(extracted, name=f"extract_b{bi}")
-    extracted = keep(with_write_partitions(extracted))
+    # observed above the cache, not inside it: AQE replaces an empty
+    # cached batch's scan with an empty relation, and an observation
+    # inside the cached plan then never reports
+    observed, obs = observe_extraction(extracted, name=f"extract_b{bi}")
     write_table(
-        extracted,
-        os.path.join(args.output, "extracted"),
-        partition_by=["day", "pbucket"],
+        observed, os.path.join(args.output, "extracted"), partition_by=["pbucket"]
     )
     metrics = obs.get
     for k in METRIC_KEYS:
@@ -151,7 +169,7 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
     if args.delta_against:
         # re-crawl delta: chunk/embed ONLY docs whose content is new vs
         # the prior corpus — unchanged re-crawls keep their existing
-        # chunks/vectors (engine/pipeline.changed_docs), so embed cost
+        # chunks (engine/pipeline.changed_docs), so embed cost
         # scales with the change rate, not crawl size
         from engine.pipeline import changed_docs
 
@@ -168,33 +186,22 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
             "docs_unchanged_skipped", 0
         ) + (n_rows - n_changed)
 
-    chunks = vectors = None
+    chunks = None
     if n_changed != 0:
         # an all-unchanged delta batch (n_changed == 0) writes no
         # chunks; a batch whose docs all chunk to nothing (extraction
         # errors / empty text only) writes an empty chunks partition
-        # set and no vectors. Each table is written BEFORE it is
-        # counted or fed on, so the write is the action that fills the
-        # cache.
+        # set. The chunks are embedded in the same pass and written
+        # BEFORE they are counted or fed on, so the write is the action
+        # that fills the cache.
         chunks = keep(
-            build_chunks(chunk_src).withColumn(
+            build_vectors(build_chunks(chunk_src)).withColumn(
                 "pbucket", host_bucket_col("url", HOST_BUCKETS)
             )
         )
         write_table(
             chunks, os.path.join(args.output, "chunks"), partition_by=["pbucket"]
         )
-        if chunks.count():
-            vectors = keep(
-                build_vectors(chunks).withColumn(
-                    "pbucket", host_bucket_col("url", HOST_BUCKETS)
-                )
-            )
-            write_table(
-                vectors,
-                os.path.join(args.output, "vectors"),
-                partition_by=["pbucket"],
-            )
 
     # lineage partitioned by the STABLE bucket key, not the batch
     # index: a resume (or rerun) with a different --commit-batches
@@ -210,7 +217,7 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
 
     if args.vector_index:
         # maintain the EXTERNAL vector index alongside the tables: put
-        # this batch's (delta) vectors, and in delta mode also delete
+        # this batch's (delta) chunk vectors, and in delta mode also delete
         # the keys a changed doc's prior chunking produced that its new
         # chunking no longer does (stale tail / now-empty docs).
         # Idempotent per batch: a re-done batch re-puts/re-deletes the
@@ -223,10 +230,10 @@ def _ingest_batch(spark, args, bi, pages, buckets, totals, cached) -> bool:
         from engine.io.vector_sink import sink_vector_deletes, sink_vectors
 
         batch_gen = args.vector_gen * VECTOR_GEN_STRIDE + bi
-        if vectors is not None:
+        if chunks is not None and chunks.count():
             n_put = (
                 sink_vectors(
-                    vectors,
+                    chunks,
                     args.vector_index_name,
                     args.vector_index,
                     gen=batch_gen,
@@ -285,6 +292,17 @@ def run(args) -> dict:
             "--vector-index with --delta-against needs --prior-chunks "
             "(the prior chunks table) to compute the stale-key delete set"
         )
+    for flag, table in (
+        ("--output", os.path.join(args.output, "extracted")),
+        ("--upsert-into", args.upsert_into),
+    ):
+        if table and _day_partitioned(table):
+            raise SystemExit(
+                f"{flag}: {table} is an extracted table in the old "
+                "(day, pbucket) layout; this job overwrites whole pbucket "
+                "partitions and would mix the layouts. Ingest into a new "
+                "directory instead (old tables still work as --delta-against)"
+            )
     spark = get_spark(
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
@@ -423,17 +441,18 @@ def _parser() -> argparse.ArgumentParser:
         "--upsert-into",
         default=None,
         help="existing extracted table to upsert this run's rows into "
-        "IN PLACE (latest capture per url wins; only affected "
-        "partitions are read/rewritten)",
+        "IN PLACE (latest capture per url wins; only this run's "
+        "pbucket partitions are read/rewritten)",
     )
     p.add_argument(
         "--delta-against",
         default=None,
-        help="prior extracted table: chunk+embed ONLY docs whose "
-        "(url, content_sha256) is new vs it — unchanged re-crawls "
-        "skip the embed stage entirely, so vector cost scales with "
-        "the change rate. This run's chunks/vectors tables then hold "
-        "exactly the delta (fold into a maintained corpus table with "
+        help="prior extracted table (either layout): chunk+embed ONLY "
+        "docs whose (url, content_sha256) is new vs it — unchanged "
+        "re-crawls skip the embed stage entirely, so vector cost scales "
+        "with the change rate. This run's chunks table (text and "
+        "embedding per chunk) then holds exactly the delta (fold into a "
+        "maintained corpus table with "
         "engine.pipeline.upsert_replace_by_key)",
     )
     p.add_argument(

@@ -168,6 +168,16 @@ def test_pack_with_trained_bpe_tokens(spark, tmp_path, pages_path):
         assert "bpe" not in json.load(f)
     assert not os.path.exists(f"{out}/bpe_merges")
 
+    # resume without --pack-budget: pack leaves the chain, and its
+    # tables leave the output directory with its manifest entries
+    res3 = run(
+        _args(pages_path, out, min_tokens=5, sample_fraction=1.0, resume=True)
+    )
+    assert "pack" not in res3["stages"] and "packing" not in res3
+    for table in ("examples", "chunks", "bpe_merges"):
+        assert not os.path.exists(f"{out}/{table}"), table
+    assert os.path.exists(f"{out}/final/_SUCCESS")
+
 
 def test_export_stage_ships_packed_examples(spark, tmp_path, pages_path):
     """--export-shard-mb + --pack-budget: the export stage assembles
@@ -304,6 +314,7 @@ def test_resume_gates_on_stage_input_table(spark, tmp_path, pages_path):
     assert "dsir" not in res["stages"]
     with open(f"{out}/corpus_manifest.json") as f:
         assert "dsir" not in json.load(f)["stages"]
+    assert not os.path.exists(f"{out}/dsir_selected")
 
 
 def test_curate_stage_compression_and_code_knobs(spark, tmp_path, pages_path):

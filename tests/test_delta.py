@@ -170,7 +170,8 @@ def _ingest_args(output: str, **over):
 def test_ingest_delta_against_embeds_only_changed_docs(spark, tmp_path):
     """End-to-end: a second crawl run with --delta-against the first
     run's extracted table chunks+embeds ONLY the changed/new docs —
-    the delta run's chunks/vectors tables contain exactly those urls,
+    the delta run's chunks table contains exactly those urls, each
+    chunk with its embedding,
     and the job reports docs_changed / docs_unchanged_skipped."""
     import jobs.ingest as ingest
 
@@ -210,26 +211,21 @@ def test_ingest_delta_against_embeds_only_changed_docs(spark, tmp_path):
     assert res["docs_unchanged_skipped"] == 3
     # extracted still holds the FULL re-crawl (latest-capture corpus)…
     assert spark.read.parquet(f"{out2}/extracted").count() == 6
-    # …but chunks/vectors hold exactly the delta
+    # …but chunks hold exactly the delta, each with its vector
     want = {
         "http://h3.example.com/p",
         "http://h4.example.com/p",
         "http://new.example.com/p",
     }
-    for table in ("chunks", "vectors"):
-        got = {
-            r["url"]
-            for r in spark.read.parquet(f"{out2}/{table}")
-            .select("url")
-            .distinct()
-            .collect()
-        }
-        assert got == want, table
+    chunks = spark.read.parquet(f"{out2}/chunks")
+    assert {r["url"] for r in chunks.select("url").distinct().collect()} == want
+    assert chunks.filter(F.col("embedding").isNull()).count() == 0
+    assert not os.path.exists(os.path.join(out2, "vectors"))
 
 
 def test_ingest_delta_all_unchanged_writes_no_chunk_tables(spark, tmp_path):
-    """An all-unchanged re-crawl must not create chunk/vector tables at
-    all (nothing to embed), and must still commit its batches."""
+    """An all-unchanged re-crawl must not create a chunks table at all
+    (nothing to embed), and must still commit its batches."""
     import jobs.ingest as ingest
 
     t1 = dt.datetime(2026, 3, 1, 12)
@@ -255,7 +251,6 @@ def test_ingest_delta_all_unchanged_writes_no_chunk_tables(spark, tmp_path):
     assert res["docs_changed"] == 0 and res["docs_unchanged_skipped"] == 4
     assert res["batches_committed"] == 1
     assert not os.path.exists(os.path.join(out2, "chunks"))
-    assert not os.path.exists(os.path.join(out2, "vectors"))
 
 
 def test_delta_then_replace_upsert_equals_full_reingest(spark, tmp_path):
@@ -392,7 +387,7 @@ def test_ingest_delta_batch_of_chunkless_changed_docs_survives(
 ):
     """A delta batch whose only changed docs chunk to NOTHING (content
     replaced by boilerplate the extractor strips) must not crash the
-    vectors read-back — the chunks dir exists but holds zero files."""
+    vector sink — the chunks dir exists but holds zero files."""
     import jobs.ingest as ingest
 
     t1 = dt.datetime(2026, 3, 1, 12)
@@ -425,4 +420,8 @@ def test_ingest_delta_batch_of_chunkless_changed_docs_survives(
     )
     assert res["docs_changed"] == 1
     assert res["batches_committed"] == 1
-    assert not os.path.exists(os.path.join(out2, "vectors"))
+    chunks_dir = os.path.join(out2, "chunks")
+    assert os.path.isdir(chunks_dir)
+    assert not [
+        f for _, _, fs in os.walk(chunks_dir) for f in fs if f.endswith(".parquet")
+    ]

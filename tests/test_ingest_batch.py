@@ -1,11 +1,14 @@
 """jobs/ingest.py computes each commit batch from one materialized
-batch: it reads back none of the tables it writes, and it releases the
-batch's cached blocks before the next batch starts."""
+batch: it reads back none of the tables it writes, it releases the
+batch's cached blocks before the next batch starts, and it writes one
+file per host bucket per table, refusing tables in the old
+(day, pbucket) layout."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import pytest
 
@@ -139,3 +142,95 @@ def test_bad_flag_combinations_fail_before_any_work(spark, tmp_path):
             ingest.run(_ingest_args(str(out), input=in2, **kw))
         assert not (out / "extracted").exists(), over
         assert not [f for _, _, fs in os.walk(index) for f in fs], over
+
+
+def _parquet_leaves(root: str) -> dict[str, int]:
+    """Directory -> parquet file count, for every directory holding one."""
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            out[os.path.relpath(dirpath, root)] = n
+    return out
+
+
+def test_ingest_writes_one_file_per_bucket(spark, tmp_path):
+    """A single-batch ingest writes one parquet file per pbucket=
+    directory in each table: extracted has no day= level, every chunk
+    carries its vector, and there is no separate vectors table."""
+    import jobs.ingest as ingest
+
+    out = str(tmp_path / "out")
+    ingest.run(_ingest_args(out, n_pages=60, partitions=None, commit_batches=1))
+    for table, level in (("extracted", ""), ("chunks", ""), ("lineage", "run_id=r1/")):
+        leaves = _parquet_leaves(os.path.join(out, table))
+        assert leaves and set(leaves.values()) == {1}, (table, leaves)
+        assert all(re.fullmatch(level + r"pbucket=\d+", d) for d in leaves), leaves
+    assert not os.path.exists(os.path.join(out, "vectors"))
+    chunks = spark.read.parquet(os.path.join(out, "chunks"))
+    assert {"chunk_text", "vec_id", "embedding", "label"} <= set(chunks.columns)
+    assert chunks.filter("embedding IS NULL").count() == 0
+
+
+def _old_layout_copy(spark, src: str, dst: str) -> None:
+    """Rewrite an extracted table in the earlier (day, pbucket) layout."""
+    spark.read.parquet(src).write.partitionBy("day", "pbucket").parquet(dst)
+
+
+def test_resume_refuses_old_day_layout(spark, tmp_path):
+    """--resume into an output whose extracted table has day= levels
+    stops before any write: a bucket-grain overwrite would mix the two
+    layouts in one table."""
+    import jobs.ingest as ingest
+
+    t1 = dt.datetime(2026, 3, 1, 12)
+    in1 = str(tmp_path / "c1")
+    _pages(
+        spark,
+        [("http://h%d.example.com/p" % i, t1, b"body %d" % i) for i in range(3)],
+    ).write.parquet(in1)
+    fresh = str(tmp_path / "fresh")
+    ingest.run(_ingest_args(fresh, input=in1))
+    out = str(tmp_path / "old")
+    _old_layout_copy(spark, os.path.join(fresh, "extracted"), f"{out}/extracted")
+    before = sorted(os.listdir(f"{out}/extracted"))
+
+    with pytest.raises(SystemExit, match="day, pbucket"):
+        ingest.run(_ingest_args(out, input=in1, resume=True))
+    assert sorted(os.listdir(f"{out}/extracted")) == before
+    assert sorted(os.listdir(out)) == ["extracted"]
+
+
+def test_upsert_into_refuses_old_day_layout(spark, tmp_path):
+    """--upsert-into an old-layout extracted table stops before any
+    write, while the same table still serves as --delta-against."""
+    import jobs.ingest as ingest
+
+    t1 = dt.datetime(2026, 3, 1, 12)
+    t2 = dt.datetime(2026, 4, 1, 12)
+    in1, in2 = str(tmp_path / "c1"), str(tmp_path / "c2")
+    _pages(
+        spark,
+        [("http://h%d.example.com/p" % i, t1, b"body %d" % i) for i in range(3)],
+    ).write.parquet(in1)
+    _pages(
+        spark,
+        [("http://h%d.example.com/p" % i, t2, b"body %d" % i) for i in range(2)]
+        + [("http://h2.example.com/p", t2, b"CHANGED body 2")],
+    ).write.parquet(in2)
+    fresh = str(tmp_path / "fresh")
+    ingest.run(_ingest_args(fresh, input=in1))
+    old = str(tmp_path / "old_extracted")
+    _old_layout_copy(spark, os.path.join(fresh, "extracted"), old)
+    before = sorted(os.listdir(old))
+
+    out = tmp_path / "o_upsert"
+    with pytest.raises(SystemExit, match="day, pbucket"):
+        ingest.run(_ingest_args(str(out), input=in2, upsert_into=old))
+    assert not out.exists()
+    assert sorted(os.listdir(old)) == before
+
+    res = ingest.run(
+        _ingest_args(str(tmp_path / "o_delta"), input=in2, delta_against=old)
+    )
+    assert res["docs_changed"] == 1 and res["docs_unchanged_skipped"] == 2

@@ -72,7 +72,7 @@ def test_upsert_latest_pruned_matches_unpruned_merge(spark, tmp_path):
     pages = gen_pages_df(spark, 400, seed=42)
     day = F.dayofmonth("warc_ts")
     prior_ex = with_write_partitions(build_extracted(pages.filter(day % 2 == 0)))
-    write_table(prior_ex, table, partition_by=["day", "pbucket"])
+    write_table(prior_ex, table, partition_by=["pbucket"])
 
     incoming_all = with_write_partitions(
         build_extracted(pages.filter(day % 2 == 1))
@@ -114,10 +114,11 @@ def test_upsert_latest_pruned_matches_unpruned_merge(spark, tmp_path):
         assert p in now
 
 
-def test_upsert_latest_removes_emptied_partition(spark, tmp_path):
-    """A partition whose only row loses to a newer capture landing in
-    another day must be DELETED, not left stale (dynamic overwrite
-    alone cannot express an empty partition)."""
+def test_upsert_latest_recapture_stays_in_its_bucket(spark, tmp_path):
+    """A re-capture on a later day replaces the url's row inside the
+    url's own bucket: the table keeps no day= level, only the incoming
+    bucket is rewritten (one file), and the other bucket's file is
+    untouched."""
     import datetime as dt
     import os
 
@@ -145,8 +146,12 @@ def test_upsert_latest_removes_emptied_partition(spark, tmp_path):
             )
         )
     )
-    write_table(prior, table, partition_by=["day", "pbucket"])
-    solo_bucket = prior.filter(F.col("url").contains("solo")).first()["pbucket"]
+    write_table(prior, table, partition_by=["pbucket"])
+    bucket = {r["url"]: r["pbucket"] for r in prior.collect()}
+    solo = bucket["http://solo.example.com/x"]
+    other = bucket["http://other.example.org/y"]
+    assert solo != other
+    other_files = _files_under(os.path.join(table, f"pbucket={other}"))
 
     incoming = with_write_partitions(
         build_extracted(
@@ -155,17 +160,17 @@ def test_upsert_latest_removes_emptied_partition(spark, tmp_path):
     ).localCheckpoint(eager=True)
 
     res = upsert_latest(spark, table, incoming)
-    assert res["emptied_partitions"] == 1
-    assert not os.path.exists(
-        os.path.join(table, "day=2026-01-01", f"pbucket={solo_bucket}")
-    )
+    assert res["affected_partitions"] == 1
+    assert not [d for d in os.listdir(table) if d.startswith("day=")]
+    assert len(_files_under(os.path.join(table, f"pbucket={solo}"))) == 1
+    assert _files_under(os.path.join(table, f"pbucket={other}")) == other_files
     rows = {
-        r["url"]: str(r["warc_ts"])
+        r["url"]: (str(r["warc_ts"]), r["day"])
         for r in spark.read.parquet(table).collect()
     }
     assert rows == {
-        "http://solo.example.com/x": "2026-02-02 12:00:00",
-        "http://other.example.org/y": "2026-01-01 12:00:00",
+        "http://solo.example.com/x": ("2026-02-02 12:00:00", "2026-02-02"),
+        "http://other.example.org/y": ("2026-01-01 12:00:00", "2026-01-01"),
     }
 
 
@@ -178,7 +183,7 @@ def test_upsert_latest_idempotent(spark, tmp_path):
     pages = gen_pages_df(spark, 150, seed=7)
     day = F.dayofmonth("warc_ts")
     prior = with_write_partitions(build_extracted(pages.filter(day % 2 == 0)))
-    write_table(prior, table, partition_by=["day", "pbucket"])
+    write_table(prior, table, partition_by=["pbucket"])
     incoming = with_write_partitions(
         build_extracted(pages.filter(day % 2 == 1))
     ).localCheckpoint(eager=True)

@@ -81,6 +81,29 @@ def test_manifest_antijoin_is_broadcast(spark, pages_path, tmp_path):
     assert "BroadcastHashJoin" in p and "LeftAnti" in p, p
 
 
+def test_stale_chunk_keys_scan_reads_keys_only(spark, tmp_path):
+    """The prior chunks table holds each chunk's text and embedding;
+    the stale-key delete set needs only (url, chunk_ix), so its scan
+    of that table must read neither column."""
+    from engine.pipeline import stale_chunk_keys
+
+    path = str(tmp_path / "chunks")
+    spark.range(40).select(
+        F.concat(F.lit("u"), F.col("id") % 8).alias("url"),
+        F.col("id").cast("int").alias("chunk_ix"),
+        F.concat(F.lit("text "), F.col("id")).alias("chunk_text"),
+        F.array(F.col("id").cast("float")).alias("embedding"),
+        (F.col("id") % 4).cast("int").alias("pbucket"),
+    ).write.partitionBy("pbucket").parquet(path)
+    new = spark.createDataFrame([("u1", 0)], "url string, chunk_ix int")
+    changed = spark.createDataFrame([("u1", 1)], "url string, pbucket int")
+    p = plan(stale_chunk_keys(spark.read.parquet(path), new, changed))
+    read_schema = [ln for ln in p.splitlines() if "ReadSchema" in ln]
+    assert read_schema, p
+    for ln in read_schema:
+        assert "embedding" not in ln and "chunk_text" not in ln, p
+
+
 def test_cosine_topk_broadcasts_queries(spark):
     from engine.queries import REGISTRY
 

@@ -41,7 +41,7 @@ def test_two_phase_run_equals_single_shot(spark, tmp_path):
     def run(pages_subset, out, mode="overwrite"):
         ex = build_extracted(pages_subset.drop("part_key"), num_partitions=4)
         ex = with_write_partitions(ex)
-        write_table(ex, out + "/extracted", partition_by=["day", "pbucket"], mode=mode)
+        write_table(ex, out + "/extracted", partition_by=["pbucket"], mode=mode)
 
     # single shot
     run(pages, single)
@@ -53,7 +53,7 @@ def test_two_phase_run_equals_single_shot(spark, tmp_path):
     run(p1, twophase)
     checkpoint.mark_done(twophase, "r1", first)
     rest = checkpoint.filter_not_done(pages, twophase, "r1")
-    # dynamic partition overwrite keeps phase-1 day-partitions intact
+    # dynamic partition overwrite keeps phase-1 bucket partitions intact
     run(rest, twophase, mode="overwrite")
 
     a = spark.read.parquet(single + "/extracted").drop("day", "pbucket")
@@ -100,10 +100,10 @@ def test_kill_mid_run_resumes_from_last_committed_batch(
 
     def dying_write(*a, **kw):
         calls["n"] += 1
-        # 4 writes per batch (extracted/chunks/vectors/lineage):
-        # call 5 = batch 2's extracted write -> batch 1 committed,
+        # 3 writes per batch (extracted/chunks/lineage):
+        # call 4 = batch 2's extracted write -> batch 1 committed,
         # batch 2 in flight, batches 3-4 untouched
-        if calls["n"] == 5:
+        if calls["n"] == 4:
             raise RuntimeError("simulated mid-run crash")
         return real_write(*a, **kw)
 
@@ -122,7 +122,7 @@ def test_kill_mid_run_resumes_from_last_committed_batch(
         str(k) for k in range(64)
     }
 
-    for table in ("extracted", "chunks", "vectors"):
+    for table in ("extracted", "chunks"):
         a = spark.read.parquet(f"{single}/{table}").drop("day", "pbucket")
         b = spark.read.parquet(f"{killed}/{table}").drop("day", "pbucket")
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
@@ -172,7 +172,7 @@ def test_resume_with_different_commit_batches_keeps_lineage_exact(
 
     def dying_write(*a, **kw):
         calls["n"] += 1
-        if calls["n"] == 5:  # batch 1 committed, batch 2 in flight
+        if calls["n"] == 4:  # batch 1 committed, batch 2 in flight
             raise RuntimeError("simulated mid-run crash")
         return real_write(*a, **kw)
 

@@ -69,7 +69,9 @@ def test_spark_submit_pyfiles_ingest(tmp_path):
         timeout=240,
     )
     assert res.returncode == 0, res.stderr[-3000:]
-    for sub in ("extracted", "chunks", "vectors", "lineage", "_manifest"):
+    for sub in ("extracted", "chunks", "lineage", "_manifest"):
         assert (out / sub).exists(), f"missing {sub}; stderr: {res.stderr[-2000:]}"
+    # each chunk's vector lives in chunks: there is no vectors table
+    assert not (out / "vectors").exists()
     # the job prints its metrics dict as the last stdout line
     assert "'docs':" in res.stdout, res.stdout[-500:]

@@ -52,6 +52,45 @@ def test_sink_vectors_dry_run_idempotent(spark, tmp_path):
     assert _dir_digest(root) == d1
 
 
+def test_sink_vectors_projects_before_python(spark, tmp_path):
+    """A wide chunks frame (chunk text, offsets, hashes, vec_id) gives
+    byte-identical request files to the 5-column vectors frame: the
+    sink keeps only url, chunk_ix, embedding and label before its
+    Python crossing, so chunk_text never ships to the workers."""
+    from engine.io.vector_sink import sink_vectors
+
+    narrow = spark.createDataFrame(
+        [(i, f"u{i % 7}", i, [float(i), 0.5], i % 10) for i in range(40)],
+        "vec_id long, url string, chunk_ix int, embedding array<float>, label int",
+    ).repartition(3, "url")
+    wide = narrow.select(
+        F.concat(F.lit("text of "), "url").alias("chunk_text"),
+        "url",
+        (F.col("chunk_ix") * 100).alias("char_start"),
+        "chunk_ix",
+        F.sha2("url", 256).alias("chunk_sha256"),
+        "vec_id",
+        "embedding",
+        "label",
+    )
+    digests = []
+    for name, df in (("narrow", narrow), ("wide", wide)):
+        idx = tmp_path / name
+        sink_vectors(df, "main", str(idx), batch_size=8).collect()
+        digests.append(_dir_digest(idx / "main"))
+    assert digests[0] and digests[0] == digests[1]
+    mip = [
+        ln
+        for ln in sink_vectors(wide, "main", str(tmp_path / "x"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .splitlines()
+        if "MapInPandas" in ln
+    ]
+    assert mip and all("chunk_text" not in ln for ln in mip), mip
+
+
 def _vecs(spark, rows):
     return spark.createDataFrame(
         rows, "url string, chunk_ix int, embedding array<float>, label int"
@@ -302,6 +341,6 @@ def test_ingest_multibatch_index_puts_do_not_collide(spark, tmp_path):
              "--master", "local[4]", "--shuffle-partitions", "4"]
         )
     )
-    n_vec = spark.read.parquet(f"{out}/vectors").count()
+    n_vec = spark.read.parquet(f"{out}/chunks").count()
     live = load_live_keys(idx, "chunks-v1")
     assert n_vec > 0 and len(live) == n_vec
